@@ -9,11 +9,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.text.EntityRuler
 
-/** The NER trie matcher as a Catalyst expression (the optional
-  * Expression upgrade of SURVEY.md §2.8). Same matcher, same
-  * contract as `EntityRuler.nerColumn`'s UDF form, minus the UDF
-  * layer's Row encode/decode per call: eval converts UTF8String →
-  * String once, runs the trie, and emits the array directly.
+/** The NER trie matcher as a Catalyst expression (the Expression
+  * form of SURVEY.md §2.8), behind `EntityRuler.nerColumn`: eval
+  * converts UTF8String → String once, runs the trie, and emits the
+  * array directly — no per-call Row encode/decode.
   * CodegenFallback is fine — the per-row work (tokenize + trie walk)
   * dwarfs the dispatch cost, unlike the ArrayDot inner loop.
   *

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{LnExact, UnicodeNormalize}
+import graft.functions.{LnExact, SentimentScore, UnicodeNormalize}
 import graft.io.Sources.table
 import graft.text.{EntityRuler, Sentiment, TextStats}
 
@@ -259,16 +259,9 @@ object TextQueries {
 
     // Lexicon sentiment with prev-token negator/intensifier handling;
     // integer per-mille arithmetic → bit-stable vs the SQL oracle.
-    "q31_sentiment_docs" -> ((s, dir) => {
-      table(s, dir, "documents")
-        .select(col("doc_id"), Sentiment.sentimentColumn(col("text")).as("sentiment"))
-    }),
-
-    // Same sentiment contract, UDF-free: posexplode + broadcast
-    // lexicon join + lag window — the Catalyst-native shape.
-    "q39_sentiment_native" -> ((s, dir) => {
-      graft.text.Sentiment.scoreNative(table(s, dir, "documents"), "doc_id", "text")
-    }),
+    // q39 is the same query under its older key (both share one oracle).
+    "q31_sentiment_docs" -> ((s, dir) => sentimentDocs(table(s, dir, "documents"))),
+    "q39_sentiment_native" -> ((s, dir) => sentimentDocs(table(s, dir, "documents"))),
 
     // Token statistics: whitespace tokens, BPE-ish subwords, distinct.
     "q32_token_stats" -> ((s, dir) => {
@@ -642,6 +635,13 @@ object TextQueries {
         .withColumn("novelty", expr("1.0 - dup_rate"))
     })
   )
+
+  /** Per-doc sentiment over WHITESPACE tokens — the tokenization the
+    * DuckDB oracle ([[sentimentOracleSql]]) can mirror with
+    * `string_split`; punctuation-adjacent words miss by design. */
+  private[graft] def sentimentDocs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      SentimentScore(split(col("text"), " ")).as("sentiment"))
 
   /** qA4's probe suffix, shared verbatim with the oracle SQL: one
     * PRE-composed é (U+00E9), then decomposed e+U+0301, i+U+0308,

@@ -2,8 +2,7 @@ package graft.text
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.Column
 
 /** Dictionary NER — the reference's one genuinely custom operator
   * (SURVEY.md §2.8): a spaCy-2.2 EntityRuler equivalent
@@ -46,8 +45,8 @@ object EntityRuler {
     var terminal: Option[(Option[String], Int, String)] = None
   }
 
-  /** Serializable compiled matcher; build driver-side, use inside a
-    * UDF/expression (Spark serializes it into the task closure once
+  /** Serializable compiled matcher; build driver-side, use inside an
+    * expression (Spark serializes it into the task closure once
     * per stage — equivalently broadcastable for very large tries).
     *
     * One trie with TYPED edges (an edge is either case-insensitive
@@ -126,21 +125,9 @@ object EntityRuler {
   }
 
   /** Column form: tokenize + match as one scalar expression
-    * (graft.functions.NerExtract — skips the UDF layer's per-row
-    * encode/decode; a plain-UDF fallback is a one-liner if needed). */
+    * (graft.functions.NerExtract). A null text gives a null array. */
   def nerColumn(matcher: Matcher)(text: Column): Column =
     graft.functions.NerExtract(text, matcher)
-
-  /** The original registered-UDF form (kept for API parity with the
-    * survey's ladder; same results as [[nerColumn]]). */
-  def nerColumnUdf(matcher: Matcher)(text: Column): Column = {
-    // null in → null out, matching NerExtract's UnaryExpression
-    // short-circuit (a bare extract(null) would tokenize to empty and
-    // emit the ["empty"] sentinel — a different row than the
-    // expression form, breaking the documented parity)
-    val f = udf((s: String) => Option(s).map(matcher.extract).orNull)
-    f(text)
-  }
 
   /** Load spaCy EntityRuler patterns.jsonl (the reference's model
     * format) into [[Pattern]]s. Token attrs handled: LOWER, Text,

@@ -1,7 +1,6 @@
 package graft.text
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
 
 /** Lexicon sentiment scorer — TextBlob-like polarity (SURVEY.md §2.8:
   * ref demo.py:162-163 uses TextBlob's PatternAnalyzer). Contract
@@ -401,107 +400,9 @@ object Sentiment {
     if (n == 0) 0.0 else sum.toDouble / n / 1000000.0
   }
 
-  def scoreText(text: String): Double =
-    score(Tokenizer.tokenize(text).toSeq)
-
-  /** Column form over WHITESPACE tokens — the variant whose contract
-    * is SQL-expressible for the DuckDB oracles (q31/q39). Misses
-    * punctuation-adjacent words by design; the pipeline uses
-    * [[sentimentColumnTokenized]] instead. */
-  def sentimentColumn(text: Column): Column = {
-    val f = udf((s: String) =>
-      if (s == null) 0.0 else score(s.split(" ").toSeq))
-    f(text)
-  }
-
-  /** Column form over the real tokenizer (punctuation split off), so
-    * "great!" still scores — the pipeline-facing variant. */
-  def sentimentColumnTokenized(text: Column): Column = {
-    val f = udf((s: String) => if (s == null) 0.0 else scoreText(s))
-    f(text)
-  }
-
-  /** Pure-Column scorer over a token ARRAY column — zero UDFs, zero
-    * joins: map-literal lexicon lookups + zip_with against the
-    * shifted-by-one and shifted-by-two token arrays for the
-    * window-2 modifier (negator at i−1, or at i−2 through an
-    * intensifier), exactly the 3-way
-    * `list_zip(w, prev, prev2)` shape the DuckDB oracles use.
-    * try_element_at (not element_at): under Spark 4 ANSI mode
-    * element_at THROWS on a missing map key, while a non-lexicon
-    * token must simply score null. */
-  def scoreTokensColumn(tokens: Column): Column = {
-    import org.apache.spark.sql.functions._
-    val polMap = typedLit(lexicon)
-    val intMap = typedLit(intensifiers)
-    val negArr = array(negators.toSeq.sorted.map(lit): _*)
-    val low = transform(tokens, t => lower(t))
-    val prev = TextStats.prevShift(low)
-    val prev2 = TextStats.prevShift(prev)
-    // per-position modifier from (prev, prev2); zipped with the token
-    // polarity in a second pass because zip_with is binary
-    val mods = zip_with(prev, prev2, (p, p2) =>
-      when(array_contains(negArr, p), lit(-500L))
-        .when(try_element_at(intMap, p).isNotNull &&
-          array_contains(negArr, p2), lit(-500L))
-        .otherwise(coalesce(try_element_at(intMap, p), lit(1000)).cast("long")))
-    val adj = zip_with(low, mods, (t, m) =>
-      try_element_at(polMap, t).cast("long") * m)
-    val hits = filter(adj, x => x.isNotNull)
-    when(size(hits) === 0, lit(0.0))
-      .otherwise((aggregate(hits, lit(0L), (acc, x) => acc + x).cast("double")
-        / size(hits)) / lit(1000000.0))
-  }
-
-  /** [[sentimentColumnTokenized]]'s contract as a pure Column
-    * expression: same regex tokenization (via regexp_extract_all, the
-    * Column twin of Tokenizer.Tok), same integer per-mille scoring —
-    * but no UDF node in the plan, so the enrich chain stays fully
-    * native. Value-equal to the UDF form on any input (pinned by
-    * SentimentSpec); the pipeline (q70/q71/q7F/q80 oracles) uses this. */
-  def sentimentColumnNative(text: Column): Column = {
-    import org.apache.spark.sql.functions._
-    val tokRe = "@[A-Za-z0-9_]+|[A-Za-z0-9_]+(?:'[A-Za-z]+)?|[^A-Za-z0-9_\\s]"
-    scoreTokensColumn(
-      regexp_extract_all(coalesce(text, lit("")), lit(tokRe), lit(0)))
-  }
-
-  /** UDF-free scoring as a DataFrame transform: posexplode tokens,
-    * broadcast-join the lexicon, lag() for the preceding-token
-    * modifier, integer aggregation per id. Same contract/values as
-    * [[sentimentColumn]] but fully inside Catalyst — the shape that
-    * scales (narrow generate + broadcast join + one shuffle on id,
-    * which the downstream per-doc aggregate needs anyway). */
-  def scoreNative(df: org.apache.spark.sql.DataFrame, idCol: String,
-                  textCol: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val spark = df.sparkSession
-    import spark.implicits._
-    val lex = broadcast(lexicon.toSeq.toDF("word", "pol"))
-    val negArr = array(negators.toSeq.sorted.map(lit): _*)
-    val toks = df.select(col(idCol), posexplode(split(col(textCol), " ")).as(Seq("pos", "tok")))
-      .withColumn("tok", lower(col("tok")))
-      .withColumn("prev", lag(col("tok"), 1, null)
-        .over(Window.partitionBy(idCol).orderBy("pos")))
-      .withColumn("prev2", lag(col("tok"), 2, null)
-        .over(Window.partitionBy(idCol).orderBy("pos")))
-    val intLex = broadcast(intensifiers.toSeq.toDF("iword", "imult"))
-    val scored = toks
-      .join(lex, toks("tok") === lex("word"), "inner")
-      .join(intLex, col("prev") === col("iword"), "left")
-      .withColumn("mod",
-        when(array_contains(negArr, col("prev")), lit(-500))
-          .when(col("imult").isNotNull &&
-            array_contains(negArr, col("prev2")), lit(-500))
-          .otherwise(coalesce(col("imult"), lit(1000))))
-      .withColumn("adj", col("pol").cast("long") * col("mod"))
-    val perDoc = scored.groupBy(idCol)
-      .agg(sum("adj").as("s"), count(lit(1)).as("n"))
-      .withColumn("sentiment", (col("s").cast("double") / col("n")) / 1000000.0)
-      .select(col(idCol), col("sentiment"))
-    // docs with zero lexicon hits score 0.0
-    df.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .na.fill(0.0, Seq("sentiment"))
-  }
+  /** The pipeline's Column scorer: [[Tokenizer]]'s regex tokens (so
+    * "great!" still scores) through the one scoring expression,
+    * graft.functions.SentimentScore. A null text scores 0.0. */
+  def sentimentColumnNative(text: Column): Column =
+    graft.functions.SentimentScore(Tokenizer.tokenizeColumn(text))
 }

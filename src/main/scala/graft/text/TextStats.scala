@@ -108,20 +108,17 @@ object TextStats {
       regexp_replace(text, UrlRe, "<URL>"),
       EmailRe, "<EMAIL>")
 
-  /** Remove CONSECUTIVE duplicate tokens (stutter removal, the cheap
-    * form of repetition cleanup): each token is kept iff it differs
-    * from its predecessor. The predecessor of the first token is the
-    * '' sentinel (same convention as the sentiment scorer's prev-token
-    * shift), so a leading empty token — only possible from leading/
-    * doubled separators — is dropped. */
   /** Predecessor-shifted copy of a token array: element i is
-    * toks[i-1], with the '' sentinel at position 0. The ONE shift
-    * convention shared by [[dedupConsecutive]] and the sentiment
-    * scorer's negator/intensifier lookback. */
-  private[text] def prevShift(toks: Column): Column =
+    * toks[i-1], with the '' sentinel at position 0. */
+  private def prevShift(toks: Column): Column =
     concat(array(lit("")),
       slice(toks, lit(1), greatest(size(toks) - 1, lit(0))))
 
+  /** Remove CONSECUTIVE duplicate tokens (stutter removal, the cheap
+    * form of repetition cleanup): each token is kept iff it differs
+    * from its predecessor. The predecessor of the first token is the
+    * '' sentinel of [[prevShift]], so a leading empty token — only
+    * possible from leading/doubled separators — is dropped. */
   def dedupConsecutive(toks: Column): Column = {
     val zipped = zip_with(toks, prevShift(toks),
       (t, p) => struct(t.as("t"), p.as("p")))

@@ -1,6 +1,7 @@
 package graft.text
 
-import scala.util.matching.Regex
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{lit, regexp_extract_all}
 
 /** Regex tokenizer approximating spaCy's English rules for the NER
   * matcher (SURVEY.md §2.8; ref NER_model/tokenizer): punctuation is
@@ -15,10 +16,18 @@ import scala.util.matching.Regex
   */
 object Tokenizer {
 
-  private val Tok: Regex =
-    "@[A-Za-z0-9_]+|[A-Za-z0-9_]+(?:'[A-Za-z]+)?|[^A-Za-z0-9_\\s]".r
+  /** The token pattern, shared by both forms below (both run
+    * java.util.regex, so they split any text identically). */
+  val Pattern: String =
+    "@[A-Za-z0-9_]+|[A-Za-z0-9_]+(?:'[A-Za-z]+)?|[^A-Za-z0-9_\\s]"
+
+  private val Tok = Pattern.r
 
   def tokenize(text: String): Array[String] =
     if (text == null) Array.empty
     else Tok.findAllIn(text).toArray
+
+  /** Column twin of [[tokenize]]; a null text gives a null array. */
+  def tokenizeColumn(text: Column): Column =
+    regexp_extract_all(text, lit(Pattern), lit(0))
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
-import graft.text.{Sentiment, TextStats}
+import graft.text.TextStats
 
 /** Scale smoke (builder brief: "would this still work at 1000×?"):
   * run the dedup/text hot paths over a 200k-row synthetic corpus
@@ -238,9 +238,8 @@ class ScaleSmokeSpec extends SparkSpec {
   }
 
   test("native sentiment over 200k docs stays distributed") {
-    val out = Sentiment.scoreNative(
-      corpus.withColumn("text", concat(col("text"), lit(" good not bad"))),
-      "doc_id", "text")
+    val out = graft.queries.TextQueries.sentimentDocs(
+      corpus.withColumn("text", concat(col("text"), lit(" good not bad"))))
     assert(out.count() === 200000)
     // every doc got the appended 'good'(+700) and 'not bad'(-(-700*0.5)=+350)
     val one = out.filter(col("doc_id") === 42).collect().head.getDouble(1)

@@ -134,13 +134,15 @@ class PatternsLoadSpec extends graft.SparkSpec {
   }
 }
 
-/** The pure-Column native scorer must be value-equal to the
-  * tokenized-UDF scorer on arbitrary text (the pipeline swapped to it
-  * in round 4), and the swap's point — no UDF node in the plan — is
-  * asserted structurally. */
+/** The one Column scorer, graft.functions.SentimentScore, must be
+  * value-equal to the Scala reference [[Sentiment.score]] on arbitrary
+  * text under both tokenizations callers use — the regex tokenizer
+  * (the pipeline, via sentimentColumnNative) and whitespace `split`
+  * (q31/q39) — and must leave no UDF node in the plan. */
 class SentimentNativeSpec extends graft.SparkSpec {
   import spark.implicits._
-  import org.apache.spark.sql.functions.col
+  import org.apache.spark.sql.functions.{col, size, split}
+  import graft.functions.SentimentScore
 
   private val texts = Seq(
     "I love coke with lime",
@@ -154,17 +156,34 @@ class SentimentNativeSpec extends graft.SparkSpec {
     "",                            // empty
     "@user #coke is awesome",      // structural tokens
     "barely sweet but extremely bitter",
+    "  not good",                  // leading spaces
+    "very good bad  ",             // trailing spaces
+    "not  good, very  bad",        // doubled spaces inside the window
     null.asInstanceOf[String])
 
-  test("native column scorer == tokenized UDF scorer") {
-    val df = texts.zipWithIndex.toDF("text", "i")
-    val both = df.select(col("i"),
-      Sentiment.sentimentColumnTokenized(col("text")).as("udf"),
-      Sentiment.sentimentColumnNative(col("text")).as("nat"))
-    both.collect().foreach { r =>
-      assert(r.getDouble(1) === r.getDouble(2),
-        s"row ${r.getInt(0)}: udf=${r.getDouble(1)} native=${r.getDouble(2)}")
+  private def scored = texts.zipWithIndex.toDF("text", "i").select(col("i"),
+    Sentiment.sentimentColumnNative(col("text")).as("regex"),
+    SentimentScore(split(col("text"), " ")).as("ws"),
+    size(split(col("text"), " ")).as("ws_n"))
+
+  test("SentimentScore == Sentiment.score under both tokenizations") {
+    scored.collect().foreach { r =>
+      val t = texts(r.getInt(0))
+      val refRegex = Sentiment.score(Tokenizer.tokenize(t).toSeq)
+      val refWs = if (t == null) 0.0 else Sentiment.score(t.split(" ").toSeq)
+      assert(r.getDouble(1) === refRegex, s"regex tokens, text=[$t]")
+      assert(r.getDouble(2) === refWs, s"whitespace tokens, text=[$t]")
     }
+  }
+
+  test("trailing empty tokens: Spark split keeps them, scores unchanged") {
+    val t = "very good bad  "
+    val r = scored.filter(col("i") === texts.indexOf(t)).collect().head
+    // Java's split drops trailing empty strings, Spark's keeps them
+    assert(t.split(" ").length === 3)
+    assert(r.getInt(3) === 5)
+    assert(r.getDouble(2) === Sentiment.score(Seq("very", "good", "bad")))
+    assert(r.getDouble(2) === (700 * 1300 + -700 * 1000).toDouble / 2 / 1000000.0)
   }
 
   test("native scorer plan contains no UDF node") {
