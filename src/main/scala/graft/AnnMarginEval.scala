@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.similarity.Similarity
@@ -40,14 +39,7 @@ import graft.similarity.Similarity
 object AnnMarginEval {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "tmp/sf10"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.io.Scratch.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.io.Scratch.session()
 
     // real sf10 shape: n vectors, dims — the eval runs at the actual
     // scale the 0.125 row was measured at

@@ -1,31 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Large-SF mode (SPARK_GRAFT_GC_EACH=1): one long-lived JVM keeps
     // every completed query's shuffle files on spark.local.dir until
     // the ContextCleaner's periodic GC (default: 30 MINUTES) lets it
     // notice the ShuffleDependencies are unreachable — at sf10 the
     // accumulated files OOM-killed the run at 93 GiB on the RAM-backed
     // scratch tier. The fix is the one a long-lived cluster session
-    // needs too: nudge the collector after every query so the scratch
+    // needs too: sweep after every query (Scratch.sweep) so the scratch
     // footprint is bounded by the largest SINGLE query's working set,
     // not the sum over the run. Off by default — the sf0.1 baseline
     // envelope was measured without per-query GC pauses.
     val gcEach = sys.env.get("SPARK_GRAFT_GC_EACH").contains("1")
-    val spark = graft.io.Scratch.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.cleaner.periodicGC.interval",
-        if (gcEach) "60s" else "30min")
-      // pin the session TZ so the NTZ→LTZ events cast (io/Sources.scala)
-      // is wall-clock-identity on any host, not just Etc/UTC ones
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.io.Scratch.session(extra = Map(
+      "spark.cleaner.periodicGC.interval" -> (if (gcEach) "60s" else "30min")))
     // JIT/codegen warm-up outside the measured window, so the several
     // seconds of first-query JVM warm-up don't land on whichever
     // query the Map happens to yield first
@@ -64,7 +53,7 @@ object Bench {
         // progress to stderr: a run killed mid-sweep (OOM, host stall)
         // should show exactly where it died instead of an empty log
         System.err.println(f"[bench] $name%s ${secs}%.2f s")
-        if (gcEach) sweepGc(spark)
+        if (gcEach) graft.io.Scratch.sweep(spark)
         (name, secs, stageS)
       }
     // Self-adjudication of host-stall windows: this host occasionally
@@ -97,7 +86,7 @@ object Bench {
         // a FAILED retry records -1 as the second measurement (not a
         // copy of the first) so it can't read as a confirming re-run
         val t2 = (System.nanoTime() - t0) / 1e9
-        if (gcEach) sweepGc(spark)
+        if (gcEach) graft.io.Scratch.sweep(spark)
         if (ok) {
           val adj = if (t > stallRatio * t2) t2 else t
           (name, adj, st, Some((t, t2)))
@@ -151,29 +140,5 @@ object Bench {
     println(s"""{"metric":"summary","value":$reported,"unit":"sec","n_queries":${adjudicated.size},"n_failed":${failed.size},"query_total_s":${num(total, 1)},"staging_total_s":${num(stagingTotal, 1)},"top10":$top10,"retried":$retriedShort,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
-  }
-
-  /** Large-SF sweep hygiene (round 11): System.gc() alone lets
-    * localCheckpoint blocks from COMPLETED queries survive until the
-    * ContextCleaner notices their RDD objects are unreachable — on
-    * the sf10 spot sweep the accumulation OOMed the shared 32g JVM in
-    * the RETRY pass (qA3's retry died, and the executor's uncaught
-    * OOM handler stopped the context, taking every remaining retry
-    * with it). Explicitly unpersist all still-registered persistent
-    * RDDs first (non-blocking; completed queries never re-read them —
-    * cross-query fixtures are parquet on scratch, not cached RDDs),
-    * THEN nudge the collector. INVARIANT this sweep relies on: any
-    * fixture shared ACROSS queries must be parquet-backed (Staging),
-    * never a cached/localCheckpoint'd RDD — unpersisting a
-    * localCheckpoint truncates lineage, so a cross-query RDD fixture
-    * would die here with missing-block errors instead of recomputing.
-    * Keep it that way when adding staging steps. Finally the
-    * collector is nudged: the sweep's heap footprint is bounded
-    * by one query's working set deterministically rather than by
-    * cleaner timing. */
-  private def sweepGc(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    System.gc()
   }
 }

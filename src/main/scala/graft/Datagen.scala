@@ -61,16 +61,9 @@ object Datagen {
     val src = args(0)
     val dst = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.io.Scratch.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // match the driver's parquet encoding (µs, not int96)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // match the testdata's parquet encoding (µs, not int96)
+    val spark = graft.io.Scratch.session(extra = Map(
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     run(spark, src, dst, factor)
     spark.stop()
   }

@@ -1,0 +1,115 @@
+package graft
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+import scala.collection.mutable
+
+/** Query inspection: `graft.Inspect <sfDir> [name…]` (every query when
+  * no name is given). Per query it prints the formatted physical plan,
+  * times one cold and three warm runs of the FULL result — a `noop`
+  * sink computes every row and column, where `count()` lets Catalyst
+  * prune projections, windows and join sides — and prints the Spark
+  * UI's stage table for the last warm run: tasks, wall/run/CPU/GC ms,
+  * max/median task time, input and shuffle volumes. Names are checked
+  * against SparkEntry.queries before any job runs. Diagnostic only —
+  * never part of the bench or verify surfaces. */
+object Inspect {
+  private case class StageRow(id: Int, name: String, var tasks: Int = 0,
+    var runMs: Long = 0, var maxMs: Long = 0,
+    times: mutable.ArrayBuffer[Long] = mutable.ArrayBuffer.empty,
+    var inputB: Long = 0, var srB: Long = 0, var swB: Long = 0,
+    var wallMs: Long = 0, var cpuNs: Long = 0, var gcMs: Long = 0)
+
+  /** Per-stage task tallies of every job run while it is attached. */
+  private class StageListener extends SparkListener {
+    val stages = mutable.LinkedHashMap.empty[Int, StageRow]
+    private val starts = mutable.Map.empty[Int, Long]
+    private def row(id: Int, name: String) =
+      stages.getOrElseUpdate(id, StageRow(id, name.takeWhile(_ != '\n')))
+    override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
+      starts(s.stageInfo.stageId) = System.nanoTime()
+      row(s.stageInfo.stageId, s.stageInfo.name); ()
+    }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      row(s.stageInfo.stageId, s.stageInfo.name).wallMs = starts
+        .get(s.stageInfo.stageId).map(t0 => (System.nanoTime() - t0) / 1000000)
+        .getOrElse(-1L)
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      val r = row(t.stageId, "?")
+      r.tasks += 1
+      Option(t.taskMetrics).foreach { m =>
+        val ms = m.executorRunTime
+        r.runMs += ms; r.times += ms; r.maxMs = math.max(r.maxMs, ms)
+        r.inputB += m.inputMetrics.bytesRead
+        r.srB += m.shuffleReadMetrics.totalBytesRead
+        r.swB += m.shuffleWriteMetrics.bytesWritten
+        r.cpuNs += m.executorCpuTime
+        r.gcMs += m.jvmGCTime
+      }
+    }
+    /** Wait until the tallies stop moving (ADVICE r15: a fixed 300 ms
+      * sleep dropped late task-end events on slow queries);
+      * listenerBus.waitUntilEmpty is private[spark], so poll the
+      * observable effect instead, with a hard 5 s cap. */
+    def settle(): Unit = {
+      var last = -1L
+      val deadline = System.nanoTime() + 5000000000L
+      while (System.nanoTime() < deadline && {
+        val c = stages.values.map(r => r.tasks.toLong + r.runMs).sum
+        val moved = c != last; last = c; moved
+      }) Thread.sleep(150)
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    if (args.isEmpty) {
+      System.err.println("usage: graft.Inspect <sfDir> [name ...]"); sys.exit(2)
+    }
+    val sfDir = args(0)
+    val names = if (args.length > 1) args.drop(1).toSeq
+      else SparkEntry.queries.keys.toSeq.sorted
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[inspect] unknown queries: ${unknown.mkString(" ")}" +
+        " (names come from SparkEntry.queries)")
+      sys.exit(2)
+    }
+    val spark = io.Scratch.session()
+    val failed = names.filterNot(inspect(spark, sfDir, _))
+    spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Plan, timings and stage table of one query; false if it failed. */
+  private def inspect(spark: SparkSession, sfDir: String, n: String): Boolean = {
+    val fn = SparkEntry.queries(n)
+    def run(): Double = {
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+    println(s"==== $n")
+    try {
+      SparkEntry.staging.get(n).foreach(_(spark, sfDir))
+      println(fn(spark, sfDir).queryExecution.explainString(FormattedMode))
+      val cold = run()
+      val listener = new StageListener
+      val warm = Seq(run(), run(), {
+        spark.sparkContext.addSparkListener(listener)
+        try run() finally {
+          listener.settle(); spark.sparkContext.removeSparkListener(listener)
+        }
+      })
+      println(f"  noop sink: cold=$cold%.2f s  warm=${warm.map(w => f"$w%.2f").mkString(" ")} s  min=${warm.min}%.2f s")
+      println("  stage tasks  wall_ms  run_ms  cpu_ms   gc_ms   max_ms  med_ms    input   shufR   shufW  name")
+      listener.stages.values.toSeq.sortBy(-_.wallMs).foreach { r =>
+        val med = if (r.times.isEmpty) 0L else r.times.sorted.apply(r.times.size / 2)
+        def mb(b: Long) = f"${b / 1048576.0}%7.1f"
+        println(f"  ${r.id}%5d ${r.tasks}%5d ${r.wallMs}%8d ${r.runMs}%7d ${r.cpuNs / 1000000}%7d ${r.gcMs}%7d ${r.maxMs}%8d ${med}%7d ${mb(r.inputB)} ${mb(r.srB)} ${mb(r.swB)}  ${r.name.take(60)}")
+      }
+      true
+    } catch { case e: Throwable =>
+      println(s"  FAILED: ${e.getMessage}"); false
+    }
+  }
+}

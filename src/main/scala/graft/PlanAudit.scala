@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-discipline audit (builder brief: ".explain('formatted') the
   * plan and iterate until it's the plan you'd want"): for every
   * registered query, count exchanges / codegen spans and check that
@@ -16,17 +14,11 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val spark = graft.io.Scratch.configure(SparkSession.builder()
-      .master("local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static audit: AQE's wrapper hides the plan tree from collect()
-      // and defers codegen/exchange decisions — audit the non-adaptive
-      // plan (what AQE starts from)
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // local[4] as the header below states; static audit: AQE's wrapper
+    // hides the plan tree from collect() and defers codegen/exchange
+    // decisions — audit the non-adaptive plan (what AQE starts from)
+    val spark = graft.io.Scratch.session(cpus = 4,
+      extra = Map("spark.sql.adaptive.enabled" -> "false"))
 
     val sb = new StringBuilder
     sb ++= "# Physical-plan audit\n\n"

@@ -318,22 +318,7 @@ object Dedup {
   def jaccardPairs(df: DataFrame, idCol: String, tokenSetCol: String,
                    bucketCol: String, threshold: Double,
                    ckpt: graft.io.CheckpointStrategy =
-                     graft.io.CheckpointStrategy.EagerLocal): DataFrame =
-    jaccardPairsWithCandidates(df, idCol, tokenSetCol, bucketCol,
-      threshold, ckpt)._2
-
-  /** Diagnostic twin of [[jaccardPairs]]: returns (candidates, out)
-    * where `candidates` is the pair frame AFTER prefix + length +
-    * position pruning and the accumulated-positional group filter,
-    * and `out` is the verified result built FROM that same frame. Exists so DiagQ44 can commit
-    * the candidates-generated vs pairs-surviving evidence (is the
-    * residual sf10 cost candidate volume or verify work?) without
-    * duplicating the operator. */
-  def jaccardPairsWithCandidates(
-      df: DataFrame, idCol: String, tokenSetCol: String,
-      bucketCol: String, threshold: Double,
-      ckpt: graft.io.CheckpointStrategy =
-        graft.io.CheckpointStrategy.EagerLocal): (DataFrame, DataFrame) = {
+                     graft.io.CheckpointStrategy.EagerLocal): DataFrame = {
     val mat = ckpt.session("jaccard")
     // Prune bounds in EXACT integer arithmetic on the rational
     // threshold thrNum/thrDen, with thrNum = ⌊threshold·thrDen⌋ ≤
@@ -449,10 +434,9 @@ object Dedup {
     // single-threaded driver relation builds — measured 19.1 s vs
     // 15.7 s at sf1): keep the first join a shuffle, where the
     // arrays ride ONCE at O(set table) alongside the slim candidate
-    // list, and broadcast only the SECOND side (estimate below; knob
-    // spark conf graft.jaccard.broadcastVerifyBytes, default 1 GiB),
-    // so the array-laden first-join output never re-shuffles —
-    // the second join is map-side. Above the bound (a corpus whose
+    // list, and broadcast only the SECOND side (estimate below, bound
+    // BroadcastVerifyBytes = 1 GiB), so the array-laden first-join
+    // output never re-shuffles — the second join is map-side. Above the bound (a corpus whose
     // set table out-sizes executor memory — where the full-truth
     // pairwise verify is cluster-budget work no matter how it is
     // routed) the spillable shuffle joins remain. Results are
@@ -468,8 +452,6 @@ object Dedup {
       col("sz").as("sz1"), sort_array(col("hs")).as("hs1"))
     val f2 = base.select(col("bkt"), col("id").as("id2"),
       col("sz").as("sz2"), sort_array(col("hs")).as("hs2"))
-    val bcastMax = df.sparkSession.conf
-      .get("graft.jaccard.broadcastVerifyBytes", (1L << 30).toString).toLong
     // cheap: base is pinned (materialized) above, so this aggregate
     // reads the checkpoint blocks, not the shingle pipeline
     val Row(nDocs: Long, sumSz: Long) = base
@@ -477,13 +459,20 @@ object Dedup {
       .head()
     // 8 B per hashed token + ~64 B/row of ids, sizes and row overhead
     val setTableBytes = sumSz * 8 + nDocs * 64
-    val v2 = if (setTableBytes <= bcastMax) broadcast(f2) else f2
-    val out = cand.join(f1, Seq("bkt", "id1")).join(v2, Seq("bkt", "id2"))
+    val v2 = if (setTableBytes <= BroadcastVerifyBytes) broadcast(f2) else f2
+    cand.join(f1, Seq("bkt", "id1")).join(v2, Seq("bkt", "id2"))
       .withColumn("inter",
         graft.functions.SortedIntersectSize(col("hs1"), col("hs2")))
       .withColumn("jaccard", col("inter") / (col("sz1") + col("sz2") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select("bkt", "id1", "id2", "jaccard")
-    (cand, out)
   }
+
+  /** Largest estimated set table [[jaccardPairs]] broadcasts into its
+    * verify join (1 GiB); larger corpora keep the spillable shuffle
+    * join. Measured on q44 at sf1 (round 10, warm, separate JVMs):
+    * broadcast verify 17.3/17.5 s stable, double shuffle 41-90 s (the
+    * candidates × arrays shuffle spills). DIAG_Q44.json records the
+    * candidate vs surviving-pair split at sf1 and sf10. */
+  private val BroadcastVerifyBytes = 1L << 30
 }

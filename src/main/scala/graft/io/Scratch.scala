@@ -1,7 +1,11 @@
 package graft.io
 
-/** Scratch-space selection for the single-JVM harness entrypoints
-  * (Bench / Verify / OpBench / PlanAudit / Profile).
+import org.apache.spark.sql.SparkSession
+
+/** Scratch-space selection and the one session factory for the
+  * single-JVM harness entrypoints (Bench / Verify / PlanAudit /
+  * Inspect / OpBench / AnnEval / AnnMarginEval / Datagen) and the
+  * specs.
   *
   * Spark treats `spark.local.dir` as the fast-ephemeral tier — on a
   * real cluster the cluster manager points it at executor-local NVMe.
@@ -137,11 +141,58 @@ object Scratch {
     * the flag, superseded rounds are reclaimed as their RDDs are
     * GC'd (amortized O(live rounds); Staged remains the mode with a
     * deterministic O(2) footprint). */
-  def configure(
-      b: org.apache.spark.sql.SparkSession.Builder
-  ): org.apache.spark.sql.SparkSession.Builder =
+  def configure(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.local.dir", root)
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.sql.warehouse.dir",
         new java.io.File(root, "warehouse").getAbsolutePath)
+
+  /** `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
+  private def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The builder behind [[session]]: the scratch policy, `local[cpus]`
+    * with `cpus` shuffle partitions, session time zone UTC (so the
+    * NTZ→LTZ events cast in io/Sources.scala is wall-clock-identity on
+    * any host), no UI, then the caller's `extra` settings. */
+  def builder(cpus: Int = defaultCpus,
+      extra: Map[String, String] = Map.empty): SparkSession.Builder =
+    configure(SparkSession.builder().master(s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(extra)
+
+  /** The one session every main and spec runs on: [[builder]]'s
+    * settings, log level WARN. */
+  def session(cpus: Int = defaultCpus,
+      extra: Map[String, String] = Map.empty): SparkSession = {
+    val spark = builder(cpus, extra).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Per-query sweep for long runs (Bench / Verify under
+    * `SPARK_GRAFT_GC_EACH=1`). System.gc() alone lets localCheckpoint
+    * blocks from COMPLETED queries survive until the ContextCleaner
+    * notices their RDD objects are unreachable — on the sf10 spot
+    * sweep the accumulation OOMed the shared 32g JVM in the RETRY pass
+    * (qA3's retry died, and the executor's uncaught OOM handler
+    * stopped the context, taking every remaining retry with it). So
+    * all still-registered persistent RDDs are unpersisted first
+    * (non-blocking; completed queries never re-read them), THEN the
+    * collector is nudged, which also lets the cleaner drop the
+    * completed queries' shuffle files: the scratch and heap footprint
+    * is bounded by one query's working set, not the sum over the run.
+    * INVARIANT this relies on: any fixture shared ACROSS queries must
+    * be parquet-backed (Staging), never a cached/localCheckpoint'd RDD
+    * — unpersisting a localCheckpoint truncates lineage, so a
+    * cross-query RDD fixture would die here with missing-block errors
+    * instead of recomputing. Keep it that way when adding staging
+    * steps. */
+  def sweep(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    System.gc()
+  }
 }

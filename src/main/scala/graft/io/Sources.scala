@@ -54,9 +54,9 @@ object Sources {
       //    the session yield LongType instead of failing outright.
       //  - timestamp[us] with isAdjustedToUTC=false: Spark 4 infers
       //    TIMESTAMP_NTZ, on which unix_micros/interval arithmetic fails
-      //    analysis. Cast NTZ→LTZ: with the session TZ pinned UTC in
-      //    every entrypoint (Verify/Bench/Profile/OpBench/PlanAudit/
-      //    specs) the cast is wall-clock-identity, matching DuckDB
+      //    analysis. Cast NTZ→LTZ: with the session TZ pinned UTC by
+      //    the one session factory (io.Scratch.session: every main and
+      //    spec) the cast is wall-clock-identity, matching DuckDB
       //    reading the same naive parquet under UTC.
       // nanosAsLong must be set BEFORE the (first, memoized) schema
       // inference so a ns-encoded ts infers as LongType instead of

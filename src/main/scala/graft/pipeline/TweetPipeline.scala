@@ -28,7 +28,7 @@ object TweetPipeline {
 
   /** The four pipeline outputs plus `release()`, which unpersists the
     * shared enriched frame — call it once the outputs are
-    * materialized, or a long-lived session (Bench/Profile loops)
+    * materialized, or a long-lived session (Bench/Inspect loops)
     * accumulates dead cached partitions. */
   final case class Outputs(freq1d: DataFrame, sent1d: DataFrame,
                            sent2d: DataFrame, freq2d: DataFrame,

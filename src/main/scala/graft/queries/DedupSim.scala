@@ -99,7 +99,8 @@ object DedupSim {
     * keeps the invariant "only corpus-level stopword dims are cut"
     * at every scale: dims binding a fixed-fraction family stay in.
     * The denominator 250 (= cap 200 at sf1, the measured recall-1.0
-    * point; 2000 at sf10, recall re-measured by DiagB4 round 13) is
+    * point; 2000 at sf10, recall re-measured in round 13 and committed
+    * as DIAG_B4.json / DIAG_B4_ORACLE.json) is
     * integer division so Spark and DuckDB agree exactly. Caps at
     * sf0.01/sf0.1/sf1 all resolve to the floor 200, so round-12
     * certified hashes are unchanged by construction. The oracle SQL
@@ -558,7 +559,7 @@ object DedupSim {
     // base-fanout revert): Spread.scan on the raw (doc_id, source,
     // text) scan ahead of tokenize+md5 measured 1.66 s vs 1.54 s
     // warm-min at sf0.1/32 — the serial stages it targets are only
-    // 200-400 ms each (StageProfile), below the ~1 s bar where a
+    // 200-400 ms each (per-stage table), below the ~1 s bar where a
     // 32-way spread pays for its exchange + task overhead (the r15
     // calibration rule). Ships unchanged.
     "q44_jaccard_pairs" -> ((s, dir) => {
@@ -808,18 +809,16 @@ object DedupSim {
     // candidate work is Σ C(df,2), so the df cap bounds the quadratic
     // term; it never binds at sf0.1 and below, and at 100 TB it is
     // what keeps the index join linear). Cap value: see QB4DfCap —
-    // evidence-set by DiagB4's sampled exact-recall sweep. Exact
+    // evidence-set by the sampled exact-recall sweep in DIAG_B4.json. Exact
     // within the subspace: dot/norms are integer sums; cos is one
     // cast + sqrt + divide.
     "qB4_sparse_cosine" -> ((s, dir) => {
-      // df cap: conf override is for DiagB4's recall/cost sweep only —
-      // production (and the oracle) use the corpus-relative formula.
-      // The count() is one metadata-cheap job on the parquet footer,
-      // not a data scan (same bounded-driver-sync class as the k-row
+      // corpus-relative df cap, the same formula as the oracle. The
+      // count() is one metadata-cheap job on the parquet footer, not
+      // a data scan (same bounded-driver-sync class as the k-row
       // centroid syncs).
       val nDocs = table(s, dir, "documents").count()
-      val dfCap = s.conf.getOption("graft.qB4.dfCap").map(_.toLong)
-        .getOrElse(math.max(QB4DfCap.toLong, nDocs / QB4DfDenom))
+      val dfCap = math.max(QB4DfCap.toLong, nDocs / QB4DfDenom)
       // Spread.scan (r15 opt): the single-split documents scan fused
       // the shingle explode into ONE serial task; identity at real
       // scale (guide §2.5, ops/Spread.scala)

@@ -4,16 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per suite; cheap since
-  * the JVM is shared across suites in the same sbt test run). */
+/** Shared local SparkSession for specs, built by the same factory as
+  * the mains (io.Scratch.session) on local[4]. The first suite to
+  * touch it creates it; every later suite in the JVM reuses it. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.io.Scratch.session(cpus = 4)
 
   override def afterAll(): Unit = {
     // keep the session alive for other suites in the same JVM

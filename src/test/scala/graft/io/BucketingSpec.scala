@@ -12,7 +12,7 @@ class BucketingSpec extends SparkSpec {
 
   test("join of co-bucketed tables plans without a shuffle exchange") {
     // spark.sql.warehouse.dir is static config — bucketed tables land
-    // in the default ./spark-warehouse (gitignored), dropped below
+    // in the scratch warehouse io.Scratch.session sets, dropped below
     val o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     val l = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     o.write.mode("overwrite").bucketBy(8, "o_orderkey")

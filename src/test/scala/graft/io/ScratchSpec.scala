@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * stable across calls (entrypoints and query staging read it at
   * different times), and must re-point java.io.tmpdir so
   * Files.createTempDirectory-based fixture staging lands on the same
-  * tier without each call site knowing the policy. */
+  * tier without each call site knowing the policy. Also pins the one
+  * session factory, [[Scratch.builder]], and that no other main source
+  * builds a session. */
 class ScratchSpec extends AnyFunSuite {
 
   test("root is a writable directory and prefers the RAM tier when present") {
@@ -34,17 +36,40 @@ class ScratchSpec extends AnyFunSuite {
     // getOrCreate would reuse the suite-shared session and silently
     // ignore these (static) configs, so assert on the builder's own
     // option map instead of a live session
-    val b = Scratch.configure(org.apache.spark.sql.SparkSession.builder())
-    val optionsField = Iterator
-      .iterate[Class[_]](b.getClass)(_.getSuperclass)
-      .takeWhile(_ != null)
-      .flatMap(_.getDeclaredFields)
-      .find(_.getName.endsWith("options"))
-      .get
-    optionsField.setAccessible(true)
-    val opts = optionsField.get(b)
-      .asInstanceOf[scala.collection.Map[String, String]]
+    def options(b: org.apache.spark.sql.SparkSession.Builder) = {
+      val optionsField = Iterator
+        .iterate[Class[_]](b.getClass)(_.getSuperclass)
+        .takeWhile(_ != null)
+        .flatMap(_.getDeclaredFields)
+        .find(_.getName.endsWith("options"))
+        .get
+      optionsField.setAccessible(true)
+      optionsField.get(b).asInstanceOf[scala.collection.Map[String, String]]
+    }
+    val opts = options(Scratch.configure(org.apache.spark.sql.SparkSession.builder()))
     assert(opts("spark.local.dir") == Scratch.root)
     assert(opts("spark.sql.warehouse.dir").startsWith(Scratch.root))
+    // the session factory: scratch policy plus local[n], n shuffle
+    // partitions, UTC session time zone, no UI, then the extras
+    val f = options(Scratch.builder(3, Map("spark.sql.adaptive.enabled" -> "false")))
+    assert(f("spark.local.dir") == Scratch.root)
+    assert(f("spark.master") == "local[3]")
+    assert(f("spark.sql.shuffle.partitions") == "3")
+    assert(f("spark.sql.session.timeZone") == "UTC")
+    assert(f("spark.ui.enabled") == "false")
+    assert(f("spark.sql.adaptive.enabled") == "false")
+  }
+
+  test("SparkSession.builder appears in exactly one main source file") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"spec must run from the repo root (cwd: ${System.getProperty("user.dir")})")
+    val sites = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+      .map(root.relativize(_).toString).toSeq
+    assert(sites == Seq("graft/io/Scratch.scala"),
+      s"every main builds its session through io.Scratch.session; found $sites")
   }
 }

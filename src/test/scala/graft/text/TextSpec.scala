@@ -18,7 +18,7 @@ class TokenizerSpec extends AnyFunSuite {
   }
 }
 
-class RulerMatcherSpec extends AnyFunSuite {
+class RulerMatcherSpec extends graft.SparkSpec {
   import EntityRuler._
   private val m = new Matcher(TextQueries.demoPatterns)
 
@@ -55,21 +55,16 @@ class RulerMatcherSpec extends AnyFunSuite {
 
   test("U2 overflow degrades instead of throwing under ANSI") {
     import org.apache.spark.sql.functions.col
-    import spark2.implicits._
+    import spark.implicits._
     val out = Seq("1e300", "3000M", "42").toDF("x")
       .select(graft.ops.Cleanse.parseKmNumber(col("x"))).as[Int].collect()
     assert(out(2) === 42)
     assert(out(0) === Int.MaxValue && out(1) === Int.MaxValue) // clamped
   }
-  private lazy val spark2 = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-    s
-  }
 
   test("malformed timestamps parse to null, not ANSI exceptions") {
     import org.apache.spark.sql.functions.col
-    import spark2.implicits._
+    import spark.implicits._
     val out = Seq("Jun 5, 2020", "12h", "Jan 05, 1995")
       .toDF("x").select(graft.ops.Cleanse.parseTweetDate(col("x")).cast("string"))
       .as[Option[String]].collect()

@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Run a graft main class directly with java (no sbt), so long bench /
 # verify / datagen jobs don't hold the single sbt lock. Mirrors
-# build.sbt's javaOptions (JDK17 add-opens + driver heap).
+# build.sbt's JDK17 add-opens and driver heap; the session settings
+# (UI off, UTC time zone) come from graft.io.Scratch.session.
 # src/main/resources is on the classpath directly: `sbt compile` does
 # NOT run copyResources, so on a fresh workspace target/classes lacks
 # the META-INF/services DataSourceRegister entry and every DSv2 query
@@ -24,7 +25,5 @@ done
 exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-32g}" \
   -XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100 \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
   "$MAIN" "$@"
