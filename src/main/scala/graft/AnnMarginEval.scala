@@ -49,19 +49,20 @@ object AnnMarginEval {
     val nClusters = (nReal / 11L).toInt
     val n = nClusters * 11L
 
-    val emb = spark.range(n)
-      .select(col("id").as("vec_id"),
-        (col("id") % nClusters).as("cl"))
-      .select(col("vec_id"),
-        transform(sequence(lit(0), lit(dims - 1)), d => {
-          val sign = when(
-            conv(substring(md5(concat_ws("_", col("cl"), d)), 1, 8),
-              16, 10).cast("long") % 2 === 0, lit(10.0f))
-            .otherwise(lit(-10.0f))
-          sign + (((col("vec_id") * 31 + d * 7) % 11).cast("float")
-            - lit(5.0f)) * lit(0.1f)
-        }).as("embedding"))
-      .localCheckpoint() // one materialization shared by both sides
+    // one materialization shared by both sides
+    val emb = graft.io.CheckpointStrategy.EagerLocal.session("margin").pin(
+      spark.range(n)
+        .select(col("id").as("vec_id"),
+          (col("id") % nClusters).as("cl"))
+        .select(col("vec_id"),
+          transform(sequence(lit(0), lit(dims - 1)), d => {
+            val sign = when(
+              conv(substring(md5(concat_ws("_", col("cl"), d)), 1, 8),
+                16, 10).cast("long") % 2 === 0, lit(10.0f))
+              .otherwise(lit(-10.0f))
+            sign + (((col("vec_id") * 31 + d * 7) % 11).cast("float")
+              - lit(5.0f)) * lit(0.1f)
+          }).as("embedding")))
 
     val k = 10
     val nQ = 8

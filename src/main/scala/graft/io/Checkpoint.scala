@@ -2,18 +2,21 @@ package graft.io
 
 import org.apache.spark.sql.DataFrame
 
-/** Materialization strategy for the engine's ITERATIVE cores
-  * (connected components, PageRank, k-core, the PPJoin prefix base…).
+/** The one materialization path in engine code: the per-round cuts of
+  * the iterative cores (connected components, PageRank, k-core, the
+  * PPJoin prefix base…) and the frames a query or operator reads more
+  * than once (DistributedRank's ranked partitions, qB7's edge list).
+  * ScratchSpec pins that no other main source checkpoints directly
+  * (OpBench's fixed operator inputs excepted).
   *
-  * Every per-round materialization in those loops used to be a
-  * hard-coded `localCheckpoint()`. That is the right default for the
-  * single-JVM harness — eager, in-memory(+local-disk), zero external
+  * `localCheckpoint()` is the right default for the single-JVM
+  * harness — eager, in-memory(+local-disk), zero external
   * dependencies — but local checkpoint blocks are NON-REPLICATED and
   * SEVER LINEAGE: on a 1000-executor cluster, losing one executor
-  * mid-iteration loses blocks that can no longer be recomputed, and
-  * the whole job dies instead of recovering. Production deployments
-  * need a fault-tolerant materialization tier; which one is a
-  * deployment decision, so the loops take it as a parameter:
+  * mid-query loses blocks that can no longer be recomputed, and the
+  * whole job dies instead of recovering. Production deployments need
+  * a fault-tolerant materialization tier; which one is a deployment
+  * decision, so callers take it as a parameter:
   *
   *  - [[CheckpointStrategy.EagerLocal]] (default everywhere):
   *    `localCheckpoint(eager)` — fastest, executor-loss-fatal.
@@ -81,8 +84,7 @@ object CheckpointStrategy {
     def session(tag: String): Mat = new Mat {
       def pin(df: DataFrame): DataFrame =
         org.apache.spark.sql.GraftShims.resetCheckpointStats(df.localCheckpoint())
-      def step(df: DataFrame): DataFrame =
-        org.apache.spark.sql.GraftShims.resetCheckpointStats(df.localCheckpoint())
+      def step(df: DataFrame): DataFrame = pin(df)
     }
   }
 
@@ -102,10 +104,7 @@ object CheckpointStrategy {
         ensureDir(df)
         org.apache.spark.sql.GraftShims.resetCheckpointStats(df.checkpoint())
       }
-      def step(df: DataFrame): DataFrame = {
-        ensureDir(df)
-        org.apache.spark.sql.GraftShims.resetCheckpointStats(df.checkpoint())
-      }
+      def step(df: DataFrame): DataFrame = pin(df)
     }
   }
 

@@ -25,10 +25,10 @@ import org.apache.spark.sql.functions._
 object DistributedRank {
 
   /** Appends `r` (1-based exact global row_number over `keys`) and
-    * `n_total` to `df`. Materializes `df` once (localCheckpoint): the
-    * ledger and the ranked frame must agree on partition ids, and
-    * exchange reuse is an optimizer courtesy, not a guarantee. On a
-    * cluster this is persist() or a reliable checkpoint.
+    * `n_total` to `df`. Pins the range-partitioned frame once
+    * ([[graft.io.CheckpointStrategy]]): the ledger and the ranked
+    * frame must agree on partition ids, and exchange reuse is an
+    * optimizer courtesy, not a guarantee.
     */
   def withGlobalRank(df: DataFrame, parts: Int, keys: Seq[Column]): DataFrame = {
     // "__"-prefixed working columns (the withNtile convention) plus a
@@ -46,14 +46,14 @@ object DistributedRank {
     // parallel. Identity on any input that already has >= parts
     // splits, so no extra exchange at scale. r16: Spread.scan now
     // also refuses any non-scan input outright (aggregates — q108's
-    // vocab counts, q106's checkpointed user frame): probing those
+    // vocab counts, q106's per-user agg): probing those
     // executed their upstream stages eagerly at construction time and
     // added a redundant exchange before the range partitioner (ADVICE
     // r15); the range exchange itself already parallelizes them.
-    val part = graft.ops.Spread.scan(df, df.columns.toSeq.map(col), parts)
-      .repartitionByRange(parts, keys: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+    val part = graft.io.CheckpointStrategy.EagerLocal.session("global_rank").pin(
+      graft.ops.Spread.scan(df, df.columns.toSeq.map(col), parts)
+        .repartitionByRange(parts, keys: _*)
+        .withColumn("__pid", spark_partition_id()))
     val wp = Window.partitionBy("__pid").orderBy(keys: _*)
     val ranked = part.withColumn("__rn", row_number().over(wp).cast("long"))
     val wled = Window.orderBy(col("__pid").asc)

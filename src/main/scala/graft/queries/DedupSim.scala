@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.{Components, Dedup}
 import graft.functions.BloomFilter
+import graft.io.CheckpointStrategy
 import graft.io.Sources.table
 import graft.io.Staging
 import graft.similarity.Similarity
@@ -375,9 +376,10 @@ object DedupSim {
       // own distinct — TWO full lineitem passes over the same quarter.
       // Bloom bits are set-idempotent (update ORs 4 bits per value),
       // so building from the distinct key frame yields byte-identical
-      // bits; the distinct is materialized once and feeds both the
-      // sketch and the exact side (on a cluster: persist()).
-      val aDistinct = corpusA.distinct().localCheckpoint()
+      // bits; the distinct is pinned once and feeds both the sketch
+      // and the exact side.
+      val aDistinct = CheckpointStrategy.EagerLocal.session("q84").pin(
+        corpusA.distinct())
       val bits = aDistinct.agg(BloomFilter.build(col("key"), m).as("bits"))
         .collect()(0).getAs[Array[Byte]]("bits")
       val aKeys = aDistinct.withColumn("exact_hit", lit(true))
@@ -488,15 +490,14 @@ object DedupSim {
     // rollup_ok — both sources' rolled-up signatures must equal the
     // directly-computed ones, hash-checked as constant true.
     "qA6_minhash_rollup" -> ((s, dir) => {
-      // Spread.scan + localCheckpoint (r15 opt): the direct and fine
-      // signature builds each re-ran the serial scan+shingle pass
-      // (the q132/q98 rewrite)
+      // Spread.scan (r15 opt): the single-split scan ran the shingle
+      // pass serially. Both signature builds read `d`; a pin measured
+      // no faster (noop sink, sf0.1, local[4]).
       val d = graft.ops.Spread.scan(
           table(s, dir, "documents").select("doc_id", "source", "lang", "text"),
           Seq(col("doc_id")))
         .withColumn("shingles", TextStats.shingles(TextStats.tokens(col("text")), 3))
         .select("source", "lang", "shingles")
-        .localCheckpoint()
       val direct = Dedup.minhashSignaturesBy(d, Seq("source"), "shingles", 8)
       val fine = Dedup.minhashSignaturesBy(d, Seq("source", "lang"), "shingles", 8)
       val rolled = fine.groupBy("source", "k").agg(min("minhash").as("rolled"))
@@ -738,15 +739,15 @@ object DedupSim {
     // for those pairs — never all-pairs; both divisions are single
     // IEEE ops from exact integers, so the doubles hash bit-exact.
     "q98_minhash_jaccard" -> ((s, dir) => {
-      // Spread.scan + localCheckpoint (r15 opt): three consumers
-      // (band keys, signatures, the shd explode) re-ran the serial
-      // single-split scan+shingle; see q132's identical rewrite
-      val d = graft.ops.Spread.scan(
-          table(s, dir, "documents").select("doc_id", "text"),
-          Seq(col("doc_id")))
-        .withColumn("shingles", TextStats.shingles(TextStats.tokens(col("text")), 3))
-        .select("doc_id", "shingles")
-        .localCheckpoint()
+      // Spread.scan + pin (r15 opt): three consumers (band keys,
+      // signatures, the shd explode) re-ran the serial single-split
+      // scan+shingle; see q132's identical rewrite
+      val d = CheckpointStrategy.EagerLocal.session("q98").pin(
+        graft.ops.Spread.scan(
+            table(s, dir, "documents").select("doc_id", "text"),
+            Seq(col("doc_id")))
+          .withColumn("shingles", TextStats.shingles(TextStats.tokens(col("text")), 3))
+          .select("doc_id", "shingles"))
       val cand = Dedup.lshCandidatePairs(
         Dedup.minhashBandKeys(d, "doc_id", "shingles", 8, 2), "doc_id")
       val sigs = Dedup.minhashSignatures(d, "doc_id", "shingles", 8)
@@ -929,19 +930,18 @@ object DedupSim {
       val e = table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val seed = e.orderBy("vec_id").limit(1).select(col("v").as("cv"))
-      var f = e.crossJoin(broadcast(seed))
-        .select(col("vec_id"), col("v"), d2(col("v"), col("cv")).as("dmin"))
-        .localCheckpoint()
+      val mat = CheckpointStrategy.EagerLocal.session("qBD")
+      var f = mat.step(e.crossJoin(broadcast(seed))
+        .select(col("vec_id"), col("v"), d2(col("v"), col("cv")).as("dmin")))
       var picks = Seq.empty[DataFrame]
       for (round <- 1 to 3) {
-        val p = f.orderBy(col("dmin").desc, col("vec_id").asc).limit(1)
-          .localCheckpoint() // 1 row; cuts the growing round lineage
+        val p = mat.pin( // 1 row; cuts the growing round lineage
+          f.orderBy(col("dmin").desc, col("vec_id").asc).limit(1))
         picks :+= p.select(lit(round).as("round"),
           col("vec_id").as("center_id"), col("dmin").as("radius2"))
-        f = f.crossJoin(broadcast(p.select(col("v").as("cv"))))
+        f = mat.step(f.crossJoin(broadcast(p.select(col("v").as("cv"))))
           .select(col("vec_id"), col("v"),
-            least(col("dmin"), d2(col("v"), col("cv"))).as("dmin"))
-          .localCheckpoint()
+            least(col("dmin"), d2(col("v"), col("cv"))).as("dmin")))
       }
       picks.reduce(_ unionByName _)
     }),
@@ -978,7 +978,6 @@ object DedupSim {
         .agg(min("doc_id").as("doc_id"), min("n_tok").as("n_tok"),
           count(lit(1)).as("n_dups"))
         .drop("h")
-        .localCheckpoint() // feeds components verts + survivors + audit
       // round 8: reuse the q74/qA1 staged full-corpus candidate
       // pairs instead of re-running shingle→minhash→band-join over
       // the gated subset. Band keys are per-doc functions of the
@@ -1004,8 +1003,8 @@ object DedupSim {
       val packed = surv.withColumn("shard", col("doc_id") % 8)
         .withColumn("cum", sum("n_tok").over(w))
         .withColumn("bin", expr("(cum - n_tok) div 512"))
-      // n_filtered = Σ per-hash dup counts over the tiny checkpointed
-      // frame — the gate count rides the dedup agg instead of
+      // n_filtered = Σ per-hash dup counts over the exact-dedup frame
+      // — the gate count rides the dedup agg instead of
       // re-tokenizing every document a second time (round 8)
       val stats = docs.agg(count(lit(1)).as("n_input"))
         .crossJoin(exact.agg(sum("n_dups").as("n_filtered")))
@@ -1116,8 +1115,8 @@ object DedupSim {
         .orderBy(col("mk"), col("doc_id"))
         .limit(CalibSampleDocs)
         .select("doc_id")
-      // Spread.scan + localCheckpoint (r15 opt): the single-split
-      // documents scan ran the shingling serially, and FOUR consumers
+      // Spread.scan + pin (r15 opt): the single-split documents
+      // scan ran the shingling serially, and FOUR consumers
       // (band keys, signatures, the shd explode) each re-ran
       // scan+shingle from the file — ~6 serial sub-second stages per
       // run. Spreading the raw text first makes the shingle pass
@@ -1130,14 +1129,14 @@ object DedupSim {
       // full-corpus scan at scale) eagerly at construction time and
       // again in the real job (ADVICE r15; Spread.scan now refuses
       // non-scan shapes outright).
-      val d = graft.ops.Spread.scan(
-          table(s, dir, "documents").select("doc_id", "text"),
-          Seq(col("doc_id")))
-        .join(broadcast(samp), Seq("doc_id"))
-        .withColumn("shingles",
-          TextStats.shingles(TextStats.tokens(col("text")), 3))
-        .select("doc_id", "shingles")
-        .localCheckpoint()
+      val d = CheckpointStrategy.EagerLocal.session("q132").pin(
+        graft.ops.Spread.scan(
+            table(s, dir, "documents").select("doc_id", "text"),
+            Seq(col("doc_id")))
+          .join(broadcast(samp), Seq("doc_id"))
+          .withColumn("shingles",
+            TextStats.shingles(TextStats.tokens(col("text")), 3))
+          .select("doc_id", "shingles"))
       val cand = Dedup.lshCandidatePairs(
         Dedup.minhashBandKeys(d, "doc_id", "shingles", 8, 2), "doc_id")
       val sigs = Dedup.minhashSignatures(d, "doc_id", "shingles", 8)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.CheckpointStrategy
 import graft.io.Sources.table
 
 /** Evaluation-science and curation-analytics queries (round 7): the
@@ -280,12 +281,12 @@ object EvalQueries {
           col("event_type")).otherwise(col("p_type")))
         .withColumn("loser", when(col("cents") > col("p_cents"),
           col("p_type")).otherwise(col("event_type")))
-      // localCheckpoint (r15 opt): the <=K^2-row pair matrix feeds
-      // three branches (it1, the n_ab window, terms) that each re-ran
-      // the full events lag-window + aggregate; materializing K^2
-      // rows makes the re-reads free at any scale
-      val pairs = comp.groupBy("winner", "loser").agg(count(lit(1)).as("n_wl"))
-        .localCheckpoint()
+      // pinned (r15 opt): the <=K^2-row pair matrix feeds three
+      // branches (it1, the n_ab window, terms) that each re-ran the
+      // full events lag-window + aggregate; materializing K^2 rows
+      // makes the re-reads free at any scale
+      val pairs = CheckpointStrategy.EagerLocal.session("q126").pin(
+        comp.groupBy("winner", "loser").agg(count(lit(1)).as("n_wl")))
       val und = pairs.select(col("winner").as("a"), col("loser").as("b"), col("n_wl"))
         .union(pairs.select(col("loser").as("a"), col("winner").as("b"), lit(0L)))
         .groupBy("a", "b").agg(sum("n_wl").as("wins_ab"))
@@ -467,7 +468,6 @@ object EvalQueries {
           col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
         .distinct()
-        .localCheckpoint()
       // hub₀ = 1 ⇒ auth₁ = in-degree; hub₁ = Σ auth₁ over c's edges
       val auth1 = e.groupBy("sup").agg(count(lit(1)).as("a1"))
       val auth2 = hitsAuth2(e, auth1)
@@ -565,11 +565,9 @@ object EvalQueries {
         .join(broadcast(langIdx), col("alt_idx") === col("idx"))
         .withColumn("label",
           when(col("keep_true"), col("lang")).otherwise(col("cls")))
-      // r16 (guide §2.4): S1 and the marginals each re-ran the docs×3
-      // explode + langIdx join; materialize the ≤3n-row (doc, label)
-      // count frame once (on a cluster: persist()).
+      // S1 and the marginals both read the ≤3n-row (doc, label) count
+      // frame; a pin measured no faster (noop, sf0.1, local[4])
       val nik = labels.groupBy("doc_id", "label").agg(count(lit(1)).as("n_ik"))
-        .localCheckpoint()
       val s1 = nik.groupBy("doc_id").agg(sum(col("n_ik") * col("n_ik")).as("s2"))
         .agg(count(lit(1)).as("n_items"), sum(col("s2") - 3L).as("s1"))
       val sk = nik.groupBy("label").agg(sum("n_ik").as("s_k"))

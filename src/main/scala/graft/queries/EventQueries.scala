@@ -540,25 +540,23 @@ object EventQueries {
     // each quartiled over a TOTAL order (metric, user_id — ties
     // can't float between tiles), composed into a 3-digit segment
     // code and rolled up. Shape (round 8): the per-user agg collapses
-    // event volume first and is checkpointed ONCE; the anchor max is
-    // a broadcast 1-row agg and each quartile is DistributedRank's
-    // range-ledger ntile — three parallel range sorts of the USER
-    // frame + user_id equi-joins back, so no single task ever holds
-    // the users (the former global ntile window did). Bit-identical
+    // event volume first; the anchor max is a broadcast 1-row agg and
+    // each quartile is DistributedRank's range-ledger ntile — three
+    // parallel range sorts of the USER frame + user_id equi-joins
+    // back, so no single task ever holds the users (the former global
+    // ntile window did). Bit-identical
     // to ntile(4) by the qE2-oracle-pinned remainder rule. All
     // counts/sums exact; avg monetary is one final division.
     "q106_rfm_segmentation" -> ((s, dir) => {
-      // checkpoint the per-user agg BEFORE the anchor-max subtree, so
-      // the events scan+agg runs once (mx and every downstream branch
-      // read the checkpoint; the crossJoin+recency derivation is a
-      // narrow recompute on top of it)
+      // read by mx and every quartile; a pin measured no faster (noop,
+      // sf0.1, local[4]): each quartile's DistributedRank pin already
+      // materializes its slice
       val base = table(s, dir, "events")
         .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("d"),
           round(col("value") * 100).cast("long").as("c"))
         .groupBy("user_id")
         .agg(max("d").as("last_d"), count(lit(1)).as("freq"),
           sum("c").as("monetary"))
-        .localCheckpoint()
       val mx = base.agg(max("last_d").as("mx_d"))
       val users = base.crossJoin(broadcast(mx))
         .withColumn("recency", col("mx_d") - col("last_d"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.CheckpointStrategy
 import graft.io.Sources.table
 
 /** Second relational batch: running/ranking window functions, cube
@@ -459,13 +460,13 @@ object Relational2 {
     "qDB_frequent_pairs" -> ((s, dir) => {
       // r15 opt: THREE consumers (items, pruned, tot) each re-ran the
       // single-split scan + distinct serially; spread the scan so the
-      // distinct's partial agg is parallel and checkpoint the ~n-row
+      // distinct's partial agg is parallel and pin the ~n-row
       // basket frame so it is computed once (guide §2.4/§2.5)
-      val b = graft.ops.Spread.scan(table(s, dir, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")),
-          Seq(col("ok")))
-        .distinct()
-        .localCheckpoint()
+      val b = CheckpointStrategy.EagerLocal.session("qDB").pin(
+        graft.ops.Spread.scan(table(s, dir, "lineitem")
+            .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")),
+            Seq(col("ok")))
+          .distinct())
       val items = b.groupBy("pk").agg(count(lit(1)).as("n"))
         .filter(col("n") >= 5)
       val pruned = b.join(broadcast(items.select("pk")), Seq("pk"), "left_semi")
@@ -928,7 +929,7 @@ object Relational2 {
     // path multiplicity after the fixpoint. Scale shape: each level
     // is one shuffle join frontier⋈edges; the hop bound caps the
     // iteration like qA3's fixed rounds. The loop-INVARIANT edge
-    // list is localCheckpoint'd once outside the recursion — a CTE
+    // list is pinned once outside the recursion — a CTE
     // inlined into the recursive step re-runs its orders⋈lineitem
     // build every level (measured 6.7s → 1.6s for 3 levels), the
     // same materialize-once move pageRank and Components make.
@@ -939,9 +940,9 @@ object Relational2 {
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("src"),
           (col("l_suppkey") * 2 + 1).as("dst"))
-      e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .localCheckpoint()
+      CheckpointStrategy.EagerLocal.session("qB7").pin(
+          e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
+            .distinct())
         .createOrReplaceTempView("qb7_edges")
       s.sql("""
         WITH RECURSIVE reach(node, hop) AS (

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{LnExact, SentimentScore, UnicodeNormalize}
+import graft.io.CheckpointStrategy
 import graft.io.Sources.table
 import graft.text.{EntityRuler, Sentiment, TextStats}
 
@@ -365,12 +366,12 @@ object TextQueries {
       // expression (the guide §4.4 duplication hazard, built-in-
       // expression form). Same rows: hex < rate(quality) is exactly
       // the old band/hex keep rule (high 16/16, mid 8/16, low 1/16).
-      val scored = graft.ops.Spread.scan(
-          table(s, dir, "documents").select("doc_id", "text"),
-          Seq(col("doc_id")))
-        .select(col("doc_id"),
-          TextStats.qualityScoreMilli(col("text")).as("quality"))
-        .localCheckpoint()
+      val scored = CheckpointStrategy.EagerLocal.session("q7B").pin(
+        graft.ops.Spread.scan(
+            table(s, dir, "documents").select("doc_id", "text"),
+            Seq(col("doc_id")))
+          .select(col("doc_id"),
+            TextStats.qualityScoreMilli(col("text")).as("quality")))
       scored
         .withColumn("band",
           when(col("quality") >= 880, lit("high"))
@@ -561,12 +562,10 @@ object TextQueries {
       // run. One (lang, term) aggregate carries all of them exactly:
       // class totals are sums of per-class term counts, term totals
       // are sums across classes, vocab is the distinct-term count of
-      // the same frame. The checkpointed base is |langs|×|vocab| rows
-      // (bounded by the vocabulary, never the corpus); on a cluster
-      // this is persist().
-      val base = tok.groupBy("lang", "term")
-        .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+      // the same frame. The pinned base is |langs|×|vocab| rows
+      // (bounded by the vocabulary, never the corpus).
+      val base = CheckpointStrategy.EagerLocal.session("qE5").pin(
+        tok.groupBy("lang", "term").agg(count(lit(1)).as("cnt")))
       val vocab = base.agg(countDistinct(col("term")).as("vocab"))
       val classTot = base.groupBy("lang")
         .agg(sum(col("cnt")).as("class_tot"))

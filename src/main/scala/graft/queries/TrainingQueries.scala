@@ -203,18 +203,15 @@ object TrainingQueries {
           posexplode(expr(
             "transform(slice(embedding, 1, 16), x -> CAST(floor(CAST(x AS DOUBLE) * 65536) AS BIGINT))"))
             .as(Seq("d", "q")))
-      // r16 (guide §2.4): `cent` is a k×16-row aggregate consumed
-      // twice (ss + the d2 join) and each recompute re-ran the full
-      // explode pass — checkpoint the tiny frame so `long` is scanned
-      // once for it. The separate per-vector `qq` pass (a third full
-      // explode + a vec_id-keyed shuffle join) folds into the d2
-      // aggregate for free: grouped by (vec_id, label, clabel), every
-      // dim d appears exactly once (cent has one row per (clabel, d)),
-      // so sum(q·q) within the group IS qq — exact integer arithmetic,
-      // same value on every clabel branch.
+      // `cent` (k×16 rows) is read twice (ss + the d2 join); a pin
+      // measured no faster (noop, sf0.1, local[4]). The separate
+      // per-vector `qq` pass (a third full explode + a vec_id-keyed
+      // shuffle join) folds into the d2 aggregate for free: grouped by
+      // (vec_id, label, clabel), every dim d appears exactly once (cent
+      // has one row per (clabel, d)), so sum(q·q) within the group IS
+      // qq — exact integer arithmetic, same value on every clabel branch.
       val cent = long.groupBy(col("label").as("clabel"), col("d"))
         .agg(sum("q").as("sd"), count(lit(1)).as("nc"))
-        .localCheckpoint() // k×16 rows; on a cluster: persist()
       val ss = cent.groupBy("clabel")
         .agg(sum(col("sd") * col("sd")).as("ss"), max("nc").as("nc"))
       val d2 = long.join(broadcast(cent), Seq("d"))

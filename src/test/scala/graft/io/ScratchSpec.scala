@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * different times), and must re-point java.io.tmpdir so
   * Files.createTempDirectory-based fixture staging lands on the same
   * tier without each call site knowing the policy. Also pins the one
-  * session factory, [[Scratch.builder]], and that no other main source
-  * builds a session. */
+  * session factory, [[Scratch.builder]], that no other main source
+  * builds a session, and that no main source outside
+  * [[CheckpointStrategy]] (and OpBench) checkpoints directly. */
 class ScratchSpec extends AnyFunSuite {
 
   test("root is a writable directory and prefers the RAM tier when present") {
@@ -60,16 +61,33 @@ class ScratchSpec extends AnyFunSuite {
     assert(f("spark.sql.adaptive.enabled") == "false")
   }
 
-  test("SparkSession.builder appears in exactly one main source file") {
+  /** Main source files (relative to src/main/scala) containing any of
+    * `needles`, sorted. */
+  private def mainSourcesContaining(needles: String*): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root),
       s"spec must run from the repo root (cwd: ${System.getProperty("user.dir")})")
-    val sites = java.nio.file.Files.walk(root).iterator().asScala
+    java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder"))
-      .map(root.relativize(_).toString).toSeq
+      .filter { p =>
+        val text = java.nio.file.Files.readString(p)
+        needles.exists(text.contains)
+      }
+      .map(root.relativize(_).toString).toSeq.sorted
+  }
+
+  test("SparkSession.builder appears in exactly one main source file") {
+    val sites = mainSourcesContaining("SparkSession.builder")
     assert(sites == Seq("graft/io/Scratch.scala"),
       s"every main builds its session through io.Scratch.session; found $sites")
+  }
+
+  test("checkpoint calls appear only in io/Checkpoint.scala and OpBench") {
+    // OpBench is the one exception: it materializes fixed operator
+    // inputs, and its BASELINE rows were measured that way
+    val sites = mainSourcesContaining("localCheckpoint(", ".checkpoint(")
+    assert(sites == Seq("graft/OpBench.scala", "graft/io/Checkpoint.scala"),
+      s"engine code materializes through io.CheckpointStrategy; found $sites")
   }
 }

@@ -647,4 +647,84 @@ class QueryPropertySpec extends SparkSpec {
         s"q04 revenue drifted from the float recomputation")
     }
   }
+
+  // Keys whose DataFrame construction still submits Spark jobs (after
+  // one warm build, so a table's first parquet schema inference is not
+  // counted), each with the reason. Every other key plans lazily.
+  private val Iterative = "iterative core: per-round CheckpointStrategy materialization"
+  private val Kept = "kept CheckpointStrategy materialization"
+  private val Collect = "collect or count at build"
+  private val RoundTrip = "round-trip schema inference"
+  private val buildJobKeys: Map[String, String] = Map(
+    "q106_rfm_segmentation" -> Kept, // DistributedRank, ×3 quartiles
+    "q108_zipf_slope" -> Kept, // DistributedRank
+    "q11B_adamic_adar" -> RoundTrip, // staged co-order edges
+    "q126_bradley_terry" -> Kept,
+    "q132_dedup_threshold_pr" -> Kept,
+    "q44_jaccard_pairs" -> Iterative, // PPJoin prefix base
+    "q57_csv_roundtrip" -> RoundTrip,
+    "q5C_partition_prune" -> RoundTrip,
+    "q74_dedup_clusters" -> Iterative, // connected components
+    "q7B_stratified_sample" -> Kept,
+    "q81_jsonl_roundtrip" -> RoundTrip,
+    "q84_bloom_membership" -> Kept, // and the sketch collect
+    "q98_minhash_jaccard" -> Kept,
+    "qA1_canonical_docs" -> RoundTrip, // staged cluster labels
+    "qA3_pagerank" -> Iterative,
+    "qA5_dynamic_prune" -> RoundTrip,
+    "qA9_curriculum_bins" -> Kept, // DistributedRank
+    "qB2_triangle_count" -> Iterative,
+    "qB4_sparse_cosine" -> Collect, // corpus size for the fan-out width
+    "qB7_recursive_cte" -> Kept,
+    "qB9_xml_roundtrip" -> RoundTrip,
+    "qBD_kcenter_coreset" -> Iterative,
+    "qC1_curation_pipeline" -> Iterative, // connected components
+    "qC3_schema_evolution" -> RoundTrip,
+    "qD5_dsv2_sink" -> RoundTrip,
+    "qD7_stream_v2_sink" -> RoundTrip,
+    "qDB_frequent_pairs" -> Kept,
+    "qE2_equidepth_hist" -> Kept, // DistributedRank
+    "qE5_naive_bayes" -> Kept,
+    "qE8_kcore" -> Iterative,
+    "qEA_bloom_join" -> Collect, // the bloom sketch
+    "qF3_split_leakage" -> RoundTrip // staged cluster labels
+  )
+
+  test("build-job census: only the pinned keys run jobs while being built") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val prefix = "build-census:"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(prefix))
+          .foreach(g => jobs.add(g.stripPrefix(prefix)))
+    }
+    sc.addSparkListener(listener)
+    try {
+      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (k, fn) =>
+        SparkEntry.staging.get(k).foreach(_(spark, dir))
+        fn(spark, dir) // warm: first reads of each table
+        sc.setJobGroup(prefix + k, "build only")
+        try fn(spark, dir) finally sc.clearJobGroup()
+      }
+      // the listener bus delivers in order: once this marker job is
+      // seen, every build job before it has been counted
+      sc.setJobGroup(prefix + "<marker>", "drain")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains("<marker>") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(jobs.contains("<marker>"), "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val got = jobs.asScala.toSeq.groupMapReduce(identity)(_ => 1)(_ + _) - "<marker>"
+    val added = got.keySet -- buildJobKeys.keySet
+    val gone = buildJobKeys.keySet -- got.keySet
+    assert(added.isEmpty && gone.isEmpty,
+      s"build-job set moved (${got.size} keys): now runs jobs while built: " +
+        added.toSeq.sorted.map(k => s"$k(${got(k)})").mkString(", ") +
+        s"; no longer does: ${gone.toSeq.sorted.mkString(", ")}")
+  }
 }
