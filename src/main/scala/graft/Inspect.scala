@@ -10,10 +10,18 @@ import scala.collection.mutable
   * sink computes every row and column, where `count()` lets Catalyst
   * prune projections, windows and join sides — and prints the Spark
   * UI's stage table for the last warm run: tasks, wall/run/CPU/GC ms,
-  * max/median task time, input and shuffle volumes. Names are checked
+  * max/median task time, input and shuffle volumes, then a `serial:`
+  * line naming the stages one task dominates. Names are checked
   * against SparkEntry.queries before any job runs. Diagnostic only —
   * never part of the bench or verify surfaces. */
 object Inspect {
+  /** A stage is flagged `serial:` when one task holds at least this
+    * share of its summed task run time and its wall time is at least
+    * [[SerialWallMs]]: the symptom of a one-row-group source whose
+    * per-row work runs in a single task. */
+  private val SerialShare = 0.9
+  private val SerialWallMs = 100L
+
   private case class StageRow(id: Int, name: String, var tasks: Int = 0,
     var runMs: Long = 0, var maxMs: Long = 0,
     times: mutable.ArrayBuffer[Long] = mutable.ArrayBuffer.empty,
@@ -107,6 +115,11 @@ object Inspect {
         def mb(b: Long) = f"${b / 1048576.0}%7.1f"
         println(f"  ${r.id}%5d ${r.tasks}%5d ${r.wallMs}%8d ${r.runMs}%7d ${r.cpuNs / 1000000}%7d ${r.gcMs}%7d ${r.maxMs}%8d ${med}%7d ${mb(r.inputB)} ${mb(r.srB)} ${mb(r.swB)}  ${r.name.take(60)}")
       }
+      val serial = listener.stages.values.toSeq.sortBy(_.id).filter(r =>
+        r.wallMs >= SerialWallMs && r.runMs > 0 && r.maxMs >= SerialShare * r.runMs)
+      println("  serial: " + (if (serial.isEmpty) "none" else serial.map(r =>
+        s"stage ${r.id} (${r.maxMs} of ${r.runMs} ms in 1 of ${r.tasks} tasks)")
+        .mkString(", ")))
       true
     } catch { case e: Throwable =>
       println(s"  FAILED: ${e.getMessage}"); false

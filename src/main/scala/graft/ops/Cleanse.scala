@@ -70,10 +70,17 @@ object Cleanse {
     * no match → null (Python returned None; regexp_extract returns ""
     * on miss, normalized here). */
   def extractKeyword(c: Column): Column = {
-    val cleaned = regexp_replace(regexp_replace(c, "\\?", ""), "%20", " ")
-    val kw = trim(regexp_replace(
-      regexp_extract(cleaned, "searchq=(.+) until", 1), " lang%3Aen", ""))
+    val kw = keywordText(c)
     when(kw =!= "", kw)
+  }
+
+  /** [[extractKeyword]] before the miss normalization: "" on no match.
+    * One copy of the regex chain, for callers that drop misses with a
+    * filter anyway. */
+  def keywordText(c: Column): Column = {
+    val cleaned = regexp_replace(regexp_replace(c, "\\?", ""), "%20", " ")
+    trim(regexp_replace(
+      regexp_extract(cleaned, "searchq=(.+) until", 1), " lang%3Aen", ""))
   }
 
   /** U5 `getCategory2` (ref demo.py:122-135): keyword→category lookup.

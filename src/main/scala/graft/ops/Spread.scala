@@ -1,8 +1,14 @@
 package graft.ops
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /** Parallelism-restoring repartitions for two shapes the planner
   * cannot size on its own (optimization guide §2.2/§2.5):
@@ -107,9 +113,10 @@ object Spread {
   /** Spread an under-split scan (see class doc). Fires ONLY when `df`
     * is a narrow chain over a file scan (see [[narrowScan]] — on any
     * other shape this is the identity and the plan is never probed)
-    * AND that scan plans to a single partition — the guide §2.5 "one
-    * huge unsplittable file" case, where the whole first stage is
-    * serial no matter how many cores exist. Any multi-split source
+    * AND that scan plans to a single loaded split ([[loadedSplits]])
+    * — the guide §2.5 "one huge unsplittable file" case, where the
+    * whole first stage is serial no matter how many cores exist. Any
+    * source whose rows already arrive in several splits
     * keeps its natural scan parallelism: repartitioning it would
     * shuffle EVERY byte to upgrade partial parallelism, and at sf10
     * that turned a 7-row-group lineitem scan (7-way) into a serial
@@ -124,10 +131,48 @@ object Spread {
     val t =
       if (target > 0) target
       else df.sparkSession.sparkContext.defaultParallelism
-    if (t <= 1 || !narrowScan(df.queryExecution.optimizedPlan)) df
-    // exchange-free by the gate above, so building the RDD runs no job
-    else if (df.rdd.getNumPartitions > 1) df
+    val plan = df.queryExecution.optimizedPlan
+    if (t <= 1 || !narrowScan(plan)) df
+    else if (loadedSplits(df, plan, t) > 1) df
     else if (keys.nonEmpty) df.repartition(t, keys: _*)
     else df.repartition(t)
+  }
+
+  /** Splits that actually carry rows. A parquet row group is read by
+    * the one split holding its midpoint, so a file with ONE row group
+    * cut into several byte ranges (sf0.1 lineitem: 10.8 MB, 3 splits)
+    * still scans in a single task while the others return nothing.
+    * Row groups are counted from the footers only for fewer files than
+    * `t`, and the count is memoized per file version, so a many-file
+    * dataset costs no footer read and a repeated build no I/O; a
+    * single row group needs no planning at all. */
+  private def loadedSplits(df: DataFrame, plan: LogicalPlan, t: Int): Int = {
+    // exchange-free by the narrowScan gate, so planning runs no job
+    lazy val planned = df.queryExecution.executedPlan
+      .collectFirst { case f: FileSourceScanExec => f.inputRDD.getNumPartitions }
+      .getOrElse(df.rdd.getNumPartitions)
+    val parquet = plan.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation
+          if r.fileFormat.isInstanceOf[ParquetFileFormat] => r }
+    parquet.map(r => (r, r.location.listFiles(Nil, Nil).flatMap(_.files))) match {
+      case Some((r, files)) if files.size < t =>
+        lazy val conf = r.sparkSession.sessionState.newHadoopConf()
+        val groups = files.map { f =>
+          rowGroupCounts.computeIfAbsent(
+            (f.getPath.toString, f.getLen, f.getModificationTime),
+            _ => rowGroups(f.getPath, conf))
+        }.sum
+        if (groups <= 1) groups else math.min(groups, planned)
+      case _ => planned
+    }
+  }
+
+  /** Row groups per (path, length, modification time). */
+  private val rowGroupCounts =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Int]()
+
+  private def rowGroups(path: Path, conf: Configuration): Int = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    try reader.getRowGroups.size finally reader.close()
   }
 }

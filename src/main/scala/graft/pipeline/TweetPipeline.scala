@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -73,15 +73,25 @@ object TweetPipeline {
       .withColumn("Likes_log", Cleanse.logBucket(Cleanse.parseKmNumber(col("Likes"))))
       .withColumn("Retweets_log", Cleanse.logBucket(Cleanse.parseKmNumber(col("Retweets"))))
       .filter(col("Page_URL").isNotNull)                         // ref demo.py:108
-      .withColumn("Keyword", Cleanse.extractKeyword(col("Page_URL")))
-      .filter(col("Keyword").isNotNull)                          // ref demo.py:110
+      .transform(once("Keyword", Cleanse.keywordText(col("Page_URL"))))
+      .filter(col("Keyword") =!= "")                             // ref demo.py:110
       .withColumn("Category2", Cleanse.categoryFor(col("Keyword")))
-      .withColumn("All_phrases", ner(col("Text")))
+      .transform(once("All_phrases", ner(col("Text"))))
       .filter(col("All_phrases").isNotNull)                      // ref demo.py:143
       .withColumn("CheckEmpty", Cleanse.checkEmpty(col("All_phrases")))
       .filter(col("CheckEmpty") =!= 1)                           // ref demo.py:157 (intended)
       .withColumn("Sentiment", Sentiment.sentimentColumnNative(col("Text")).cast("float"))
   }
+
+  /** Appends `c` as column `name`, evaluated once per row. A plain
+    * `withColumn` is a projection alias, which the optimizer copies
+    * into every filter it pushes below that projection, evaluating
+    * the expression once per copy (NER's null and empty filters made
+    * three). A one-element explode is a Generate, whose output no
+    * filter can be pushed beneath and no consumer can inline; it
+    * yields exactly one row per input row, null included. */
+  private def once(name: String, c: Column)(df: DataFrame): DataFrame =
+    df.select(col("*"), explode(array(c)).as(name))
 
   private val keys = Seq("Year", "Month", "Category2")
 

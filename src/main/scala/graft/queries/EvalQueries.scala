@@ -607,36 +607,40 @@ object EvalQueries {
         .withColumn("mk", md5(col("doc_id").cast("string")))
         .orderBy(col("mk"), col("doc_id")).limit(Q12eProbeCap)
         .select(col("doc_id").as("q"))
-      val cands = table(s, dir, "documents").select(col("doc_id").as("d"))
+      // the broadcast nested-loop join streams the candidates, so
+      // their split count is the width of the md5 pair scoring
+      val cands = graft.ops.Spread.scan(
+        table(s, dir, "documents").select(col("doc_id").as("d")),
+        Seq(col("d")))
       val scored = probes.crossJoin(cands).filter(col("q") =!= col("d"))
         .withColumn("score_fp", md5Bits(concat(col("q"), lit("|s|"), col("d"))))
+      // DCG, IDCG and the first relevant rank come out of ONE ranked
+      // pass: the ideal order is a second sort inside the same
+      // q-partitions, and a single aggregate takes all three. Only the
+      // top-100 rows read the relevance grade, so its md5 is taken
+      // after the rank cut, not on every pair.
+      val byQ = Window.partitionBy("q")
+      val ranked = scored
+        .withColumn("pos", row_number().over(
+          byQ.orderBy(col("score_fp").desc, col("d").asc)).cast("long"))
+        .filter(col("pos") <= 100)
+        .withColumn("grade", md5Bits(concat(col("q"), lit("|g|"), col("d"))) % 16)
         .withColumn("rel",
-          when(md5Bits(concat(col("q"), lit("|g|"), col("d"))) % 16 === 15, 3L)
-            .when(md5Bits(concat(col("q"), lit("|g|"), col("d"))) % 16 === 14, 2L)
-            .when(md5Bits(concat(col("q"), lit("|g|"), col("d"))) % 16 >= 12, 1L)
+          when(col("grade") === 15, 3L)
+            .when(col("grade") === 14, 2L)
+            .when(col("grade") >= 12, 1L)
             .otherwise(0L))
         .withColumn("gain", expr("shiftleft(1L, CAST(rel AS INT)) - 1L"))
-      val ranked = scored
-        .withColumn("pos", row_number().over(Window.partitionBy("q")
-          .orderBy(col("score_fp").desc, col("d").asc)).cast("long"))
-        .filter(col("pos") <= 100)
-      val dcg = ranked.filter(col("pos") <= 10)
-        .withColumn("term_fp", floor(lit(1e6) * col("gain").cast("double")
-          / (graft.functions.LnExact(col("pos").cast("double") + 1.0)
-             / graft.functions.LnExact(lit(2.0)))).cast("long"))
-        .groupBy("q").agg(sum("term_fp").as("dcg_fp"))
-      val idcg = ranked
-        .withColumn("ipos", row_number().over(Window.partitionBy("q")
-          .orderBy(col("gain").desc, col("d").asc)).cast("long"))
-        .filter(col("ipos") <= 10)
-        .withColumn("term_fp", floor(lit(1e6) * col("gain").cast("double")
-          / (graft.functions.LnExact(col("ipos").cast("double") + 1.0)
-             / graft.functions.LnExact(lit(2.0)))).cast("long"))
-        .groupBy("q").agg(sum("term_fp").as("idcg_fp"))
-      val rr = ranked.filter(col("rel") >= 1)
-        .groupBy("q").agg(min("pos").as("first_rel"))
-      probes.join(dcg, Seq("q"), "left")
-        .join(idcg, Seq("q"), "left").join(rr, Seq("q"), "left")
+        .withColumn("ipos", row_number().over(
+          byQ.orderBy(col("gain").desc, col("d").asc)).cast("long"))
+      def term(rank: String) = floor(lit(1e6) * col("gain").cast("double")
+        / (graft.functions.LnExact(col(rank).cast("double") + 1.0)
+           / graft.functions.LnExact(lit(2.0)))).cast("long")
+      val per = ranked.groupBy("q").agg(
+        sum(when(col("pos") <= 10, term("pos"))).as("dcg_fp"),
+        sum(when(col("ipos") <= 10, term("ipos"))).as("idcg_fp"),
+        min(when(col("rel") >= 1, col("pos"))).as("first_rel"))
+      probes.join(per, Seq("q"), "left")
         .select(col("q"),
           coalesce(col("dcg_fp"), lit(0L)).as("dcg_fp"),
           coalesce(col("idcg_fp"), lit(0L)).as("idcg_fp"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.dedup.Dedup
 import graft.io.{Sinks, Sources, Staging}
@@ -79,15 +80,21 @@ object IoQueries {
     }
 
   /** JSONL fixture for q81: the line-delimited JSON layout training
-    * corpora actually ship in, written by the distributed JSON sink. */
-  private def stageJsonl(s: SparkSession, dir: String): String =
-    Staging.once(s"q81_jsonl:$dir") {
+    * corpora actually ship in, written by the distributed JSON sink.
+    * Returns the staged directory and the schema it was written with:
+    * reading back with that schema needs no inference, which is a
+    * Spark job on every read and drops every column of an empty
+    * input. */
+  private def stageJsonl(s: SparkSession, dir: String): (String, StructType) = {
+    val docs = table(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), col("source"), col("text"))
+    val tmp = Staging.once(s"q81_jsonl:$dir") {
       val tmp = graft.io.Scratch.tempDir("graft_q81_jsonl")
-      table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("source"), col("text"))
-        .write.mode("overwrite").json(s"$tmp/docs")
+      docs.write.mode("overwrite").json(s"$tmp/docs")
       tmp
     }
+    (tmp, docs.schema)
+  }
 
   /** ORC fixture for q83 (Spark's second columnar format). */
   private def stageOrc(s: SparkSession, dir: String): String =
@@ -484,13 +491,15 @@ object IoQueries {
     }),
 
     // JSONL round-trip: parquet → distributed line-delimited JSON
-    // write (staged) → schema-inferred re-read → aggregate. The
-    // oracle reads parquet directly, so any escaping/unicode/type
+    // write (staged) → re-read with the staged schema → aggregate.
+    // The oracle reads parquet directly, so any escaping/unicode/type
     // loss in the JSON layer breaks the hash — the losslessness
-    // check for the format most raw training corpora arrive in.
+    // check for the format most raw training corpora arrive in;
+    // FAILFAST makes a line that does not parse under the schema an
+    // error instead of a row of nulls.
     "q81_jsonl_roundtrip" -> ((s, dir) => {
-      val tmp = stageJsonl(s, dir)
-      s.read.json(s"$tmp/docs")
+      val (tmp, schema) = stageJsonl(s, dir)
+      s.read.schema(schema).option("mode", "FAILFAST").json(s"$tmp/docs")
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
           sum("doc_id").as("sum_ids"),

@@ -16,6 +16,16 @@ import graft.io.Sources.table
   */
 object Relational2 {
 
+  /** (return flag, integer cents) per lineitem row, for qCD and qCC.
+    * A one-row-group lineitem scans in a single task; the spread runs
+    * the per-row BigDecimal `round` on every core. */
+  private def centsByFlag(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Spread.scan(
+        table(s, dir, "lineitem").select("l_returnflag", "l_extendedprice"),
+        Seq(col("l_extendedprice")))
+      .select(col("l_returnflag").as("flag"),
+        round(col("l_extendedprice") * 100).cast("long").as("cents"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Deterministic string aggregation (LISTAGG / string_agg — the
     // one SQL reshaping surface not yet covered): per (returnflag,
@@ -352,16 +362,17 @@ object Relational2 {
     // the slack absorbs that gap while any real bucket-math or merge
     // regression still flips the booleans and fails the gate.
     "qCD_dd_quantiles" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-        .select(col("l_returnflag").as("flag"),
-          round(col("l_extendedprice") * 100).cast("long").as("cents"))
-      li.groupBy("flag")
+      // the array form builds and merges ONE value map for all three
+      // levels, with the same interpolation per level
+      centsByFlag(s, dir)
+        .groupBy("flag")
         .agg(count(lit(1)).as("n"),
-          expr("percentile(cents, 0.5)").as("p50"),
-          expr("percentile(cents, 0.95)").as("p95"),
-          expr("percentile(cents, 0.99)").as("p99"),
+          expr("percentile(cents, array(0.5, 0.95, 0.99))").as("p"),
           graft.functions.DDSketch(col("cents"), 0.02, 1024,
             Seq(0.5, 0.95, 0.99)).as("est"))
+        .select(col("flag"), col("n"), element_at(col("p"), 1).as("p50"),
+          element_at(col("p"), 2).as("p95"), element_at(col("p"), 3).as("p99"),
+          col("est"))
         .select(col("flag"), col("n"), col("p50"), col("p95"), col("p99"),
           (abs(element_at(col("est"), 1) - col("p50"))
             <= lit(0.03) * col("p50")).as("ok50"),
@@ -511,12 +522,12 @@ object Relational2 {
     // bit-safe pattern: never sum clamped DOUBLES across partitions,
     // derive clamp effects algebraically as n_low·p05 + n_high·p95).
     "qCC_winsorized" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-        .select(col("l_returnflag").as("flag"),
-          round(col("l_extendedprice") * 100).cast("long").as("cents"))
+      // both phases read the one spread exchange of `li`
+      val li = centsByFlag(s, dir)
       val pct = li.groupBy("flag")
-        .agg(expr("percentile(cents, 0.05)").as("p05"),
-          expr("percentile(cents, 0.95)").as("p95"))
+        .agg(expr("percentile(cents, array(0.05, 0.95))").as("p"))
+        .select(col("flag"), element_at(col("p"), 1).as("p05"),
+          element_at(col("p"), 2).as("p95"))
       li.join(broadcast(pct), Seq("flag"))
         .groupBy("flag")
         .agg(count(lit(1)).as("n"),
@@ -557,10 +568,17 @@ object Relational2 {
     // legitimate sketch variance, not a bug; inspect the estimate
     // and re-baseline rather than assuming a regression.
     "q1A_approx_distinct" -> ((s, dir) => {
-      table(s, dir, "lineitem")
+      // distinct (flag, partkey) first, so the exact count is a plain
+      // count: the spread is hashed on the partkey, which already
+      // clusters that aggregate, and the HLL sketch is insensitive to
+      // duplicates, so it estimates the same over the distinct rows
+      graft.ops.Spread.scan(
+          table(s, dir, "lineitem").select("l_returnflag", "l_partkey"),
+          Seq(col("l_partkey")))
+        .distinct()
         .groupBy("l_returnflag")
         .agg(approx_count_distinct(col("l_partkey"), 0.02).as("approx"),
-          countDistinct(col("l_partkey")).as("exact_parts"))
+          count(col("l_partkey")).as("exact_parts"))
         .select(col("l_returnflag"), col("exact_parts"),
           (abs(col("approx") - col("exact_parts"))
             <= lit(0.06) * col("exact_parts")).as("within_bound"))

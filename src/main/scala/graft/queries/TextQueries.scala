@@ -329,18 +329,31 @@ object TextQueries {
     // n-gram" filter's numerator/denominator kept as exact integers —
     // the caller does the one division).
     "q65_repetition" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-      val toks = TextStats.tokens(col("text"))
-      val base = d.select(col("doc_id"),
-        size(toks).as("n_tokens"),
-        (size(toks) - size(array_distinct(toks))).as("n_dup"))
-      val top = d.select(col("doc_id"),
-        explode(TextStats.shingles(TextStats.tokens(col("text")), 2)).as("bg"))
-        .groupBy("doc_id", "bg").agg(count(lit(1)).as("n"))
-        .groupBy("doc_id")
+      // (k, k_null) is doc_id as a null-safe key with no nullable
+      // part: the join infers no isnotnull filter to push below the
+      // spread, so both sides read ONE spread exchange, which is
+      // already hashed on the aggregate and join keys; the hint keeps
+      // the join on that partitioning instead of broadcasting `top`.
+      // `top` groups every row sharing a doc_id; a null doc_id
+      // matches no document and gets 0/0.
+      val key = Seq(coalesce(col("doc_id"), lit(0L)), col("doc_id").isNull)
+      val d = graft.ops.Spread.scan(
+          table(s, dir, "documents").select("doc_id", "text"), key)
+        .select(col("doc_id"), key(0).as("k"), key(1).as("k_null"),
+          TextStats.tokens(col("text")).as("toks"))
+      val base = d.select(col("doc_id"), col("k"), col("k_null"),
+        size(col("toks")).as("n_tokens"),
+        (size(col("toks")) - size(array_distinct(col("toks")))).as("n_dup"))
+      val top = d.select(col("k"), col("k_null"),
+          explode(TextStats.shingles(col("toks"), 2)).as("bg"))
+        .groupBy("k", "k_null", "bg").agg(count(lit(1)).as("n"))
+        .groupBy("k", "k_null")
         .agg(max("n").as("top_bigram_n"), sum("n").as("n_bigrams"))
-      base.join(top, Seq("doc_id"), "left")
-        .na.fill(0L, Seq("top_bigram_n", "n_bigrams"))
+      def orZero(c: String) =
+        coalesce(when(col("doc_id").isNotNull, col(c)), lit(0L)).as(c)
+      base.join(top.hint("shuffle_hash"), Seq("k", "k_null"), "left")
+        .select(col("doc_id"), col("n_tokens"), col("n_dup"),
+          orZero("top_bigram_n"), orZero("n_bigrams"))
     }),
 
     // Consecutive-duplicate-token removal (stutter cleanup).

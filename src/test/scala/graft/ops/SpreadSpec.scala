@@ -9,7 +9,8 @@ import graft.SparkSpec
   *    when the source already yields >= target splits — the property
   *    that makes it free at real scale;
   *  - `scan` spreads an under-split source to the target width and
-  *    keeps the exact multiset of rows;
+  *    keeps the exact multiset of rows, counting a parquet file's
+  *    splits by the row groups they carry;
   *  - `fanout` yields exactly the configured shuffle width (the AQE
   *    coalescer must not shrink it — REPARTITION_BY_NUM), rows
   *    preserved.
@@ -45,6 +46,46 @@ class SpreadSpec extends SparkSpec {
     val out = Spread.scan(df, target = 4)
     assert(out.rdd.getNumPartitions == 4)
     assert(out.as[Long].collect().sorted.toSeq == (0L until 100L))
+  }
+
+  /** `spark.range(n)` written as ONE parquet file; `rowGroupBytes`
+    * bounds each row group's size, so a small value yields several. */
+  private def parquetFile(n: Long, rowGroupBytes: Option[Int]): String = {
+    val dir = graft.io.Scratch.tempDir("spread_spec")
+    val w = spark.range(0, n, 1, numPartitions = 1).toDF("id").write
+    rowGroupBytes.fold(w)(b => w.option("parquet.block.size", b.toString))
+      .mode("overwrite").parquet(dir)
+    dir
+  }
+
+  /** Reads `dir` cut into byte-range splits of at most 4 KB. */
+  private def withSmallSplits[T](body: => T): T = {
+    val k = "spark.sql.files.maxPartitionBytes"
+    val was = spark.conf.get(k)
+    spark.conf.set(k, "4096")
+    try body finally spark.conf.set(k, was)
+  }
+
+  test("scan spreads a one-row-group parquet file cut into several splits") {
+    // the splits without the row group's midpoint read nothing, so
+    // the scan is as serial as a one-split source
+    val dir = parquetFile(20000, None)
+    withSmallSplits {
+      val df = spark.read.parquet(dir)
+      assert(df.rdd.getNumPartitions > 1)
+      val out = Spread.scan(df, Seq(col("id")), target = 4)
+      assert(out.rdd.getNumPartitions == 4)
+      assert(out.as[Long].collect().sorted.toSeq == (0L until 20000L))
+    }
+  }
+
+  test("scan is the identity on a parquet file whose row groups span splits") {
+    val dir = parquetFile(20000, Some(8192))
+    withSmallSplits {
+      val df = spark.read.parquet(dir)
+      assert(df.rdd.getNumPartitions > 1)
+      assert(Spread.scan(df, Seq(col("id")), target = 4) eq df)
+    }
   }
 
   test("fanout pins the configured shuffle width against AQE coalescing") {

@@ -147,6 +147,42 @@ class TweetPipelineSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("NER and the keyword regex chain run once per sampled row, on both paths") {
+    // a filter on a projected column used to be pushed below the
+    // projection with the expression copied into it: 3 NerExtract and
+    // 2 regexp_extract nodes per enriched row. The count is taken over
+    // the physical plan that runs; with persist the outputs scan the
+    // cache, whose own plan is counted separately.
+    import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpExtract}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def nodes(p: SparkPlan)(pick: PartialFunction[Expression, Unit]): Int =
+      p.collect { case n => n.expressions.map(_.collect(pick).size).sum }.sum
+    def ner(p: SparkPlan) = nodes(p) { case _: graft.functions.NerExtract => }
+    def regex(p: SparkPlan) = nodes(p) { case _: RegExpExtract => }
+    // repartitioned: over a bare local relation the optimizer would
+    // evaluate the whole enrichment while planning
+    val raw = fixture.toDF("Timestamp", "Text", "Page_URL", "Comments",
+      "Likes", "Retweets").repartition(2)
+    def outputs(persist: Boolean) = TweetPipeline.run(raw, matcher, seed = 7L,
+      sampleN = 5, months = Seq("2019-1", "2019-2", "2020-3"), persist = persist)
+    def all(o: TweetPipeline.Outputs) = Seq(o.freq1d, o.sent1d, o.sent2d, o.freq2d)
+    val adaptiveWas = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      all(outputs(persist = false)).map(_.queryExecution.executedPlan).foreach { p =>
+        assert(ner(p) === 1 && regex(p) === 1, p.toString)
+      }
+      val cached = outputs(persist = true)
+      try all(cached).map(_.queryExecution.executedPlan).foreach { p =>
+        assert(ner(p) === 0 && regex(p) === 0, p.toString)
+        val child = p.collectFirst { case s: InMemoryTableScanExec =>
+          s.relation.cachedPlan }
+        assert(child.exists(c => ner(c) === 1 && regex(c) === 1), child.toString)
+      } finally cached.release()
+    } finally spark.conf.set("spark.sql.adaptive.enabled", adaptiveWas)
+  }
+
   test("hashSample: selects the sampleN-smallest md5 rows, layout-invariant") {
     // 20 valid rows, sample 8: the selected multiset must equal a
     // driver-side MessageDigest fold of the same fixed-width

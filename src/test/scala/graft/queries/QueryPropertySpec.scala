@@ -648,6 +648,54 @@ class QueryPropertySpec extends SparkSpec {
     }
   }
 
+  /** An sf dir holding only `documents.parquet`, written from `df`. */
+  private def documentsDir(df: org.apache.spark.sql.DataFrame): String = {
+    val d = graft.io.Scratch.tempDir("qprop_docs")
+    df.coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
+    d
+  }
+
+  test("q81 over a zero-row documents table keeps its output schema") {
+    // the staged JSONL is read back with the schema it was written
+    // with; inference over an empty directory would fail or drop columns
+    val q = "q81_jsonl_roundtrip"
+    val empty = documentsDir(spark.read.parquet(s"$dir/documents.parquet").limit(0))
+    SparkEntry.staging(q)(spark, empty)
+    val out = SparkEntry.queries(q)(spark, empty)
+    SparkEntry.staging(q)(spark, dir)
+    val full = SparkEntry.queries(q)(spark, dir)
+    assert(out.schema.map(f => (f.name, f.dataType)) ===
+      full.schema.map(f => (f.name, f.dataType)))
+    assert(out.collect().isEmpty)
+  }
+
+  test("q65 keeps per-row base counts and per-doc_id bigram counts under duplicate and null ids") {
+    // the spread single-pass form must match the plain equi-join form:
+    // `top` aggregates over every row sharing a doc_id, a null doc_id
+    // never matches and gets 0/0
+    import spark.implicits._
+    val docs = Seq[(Option[Long], String)](
+      (Some(1L), "a b a b"), (Some(1L), "a b c"), (None, "x y x y"),
+      (None, "z"), (Some(2L), "solo"), (Some(3L), ""), (Some(4L), "p q p q p q"))
+      .toDF("doc_id", "text")
+    val d = documentsDir(docs)
+    val got = SparkEntry.queries("q65_repetition")(spark, d)
+    val toks = graft.text.TextStats.tokens(col("text"))
+    val base = docs.select(col("doc_id"), size(toks).as("n_tokens"),
+      (size(toks) - size(array_distinct(toks))).as("n_dup"))
+    val top = docs.select(col("doc_id"),
+        explode(graft.text.TextStats.shingles(toks, 2)).as("bg"))
+      .groupBy("doc_id", "bg").agg(count(lit(1)).as("n"))
+      .groupBy("doc_id").agg(max("n").as("top_bigram_n"), sum("n").as("n_bigrams"))
+    val want = base.join(top, Seq("doc_id"), "left")
+      .na.fill(0L, Seq("top_bigram_n", "n_bigrams"))
+    assert(got.columns.toSeq === want.columns.toSeq)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+      .sortBy(_.mkString("|"))
+    assert(rows(got) === rows(want))
+    assert(rows(got).count(_.head == 1L) === 2)
+  }
+
   // Keys whose DataFrame construction still submits Spark jobs (after
   // one warm build, so a table's first parquet schema inference is not
   // counted), each with the reason. Every other key plans lazily.
@@ -666,7 +714,6 @@ class QueryPropertySpec extends SparkSpec {
     "q5C_partition_prune" -> RoundTrip,
     "q74_dedup_clusters" -> Iterative, // connected components
     "q7B_stratified_sample" -> Kept,
-    "q81_jsonl_roundtrip" -> RoundTrip,
     "q84_bloom_membership" -> Kept, // and the sketch collect
     "q98_minhash_jaccard" -> Kept,
     "qA1_canonical_docs" -> RoundTrip, // staged cluster labels
