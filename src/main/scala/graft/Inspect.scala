@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import scala.collection.mutable
 
@@ -11,9 +11,9 @@ import scala.collection.mutable
   * prune projections, windows and join sides — and prints the Spark
   * UI's stage table for the last warm run: tasks, wall/run/CPU/GC ms,
   * max/median task time, input and shuffle volumes, then a `serial:`
-  * line naming the stages one task dominates. Names are checked
-  * against SparkEntry.queries before any job runs. Diagnostic only —
-  * never part of the bench or verify surfaces. */
+  * line naming the stages one task dominates. Unknown names exit 2
+  * before any job runs. Diagnostic only — never part of the bench or
+  * verify surfaces. */
 object Inspect {
   /** A stage is flagged `serial:` when one task holds at least this
     * share of its summed task run time and its wall time is at least
@@ -74,55 +74,37 @@ object Inspect {
       System.err.println("usage: graft.Inspect <sfDir> [name ...]"); sys.exit(2)
     }
     val sfDir = args(0)
-    val names = if (args.length > 1) args.drop(1).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    if (unknown.nonEmpty) {
-      System.err.println(s"[inspect] unknown queries: ${unknown.mkString(" ")}" +
-        " (names come from SparkEntry.queries)")
-      sys.exit(2)
-    }
+    val names = QueryLoop.selectOrExit("inspect", args.drop(1).toSeq)
     val spark = io.Scratch.session()
-    val failed = names.filterNot(inspect(spark, sfDir, _))
+    val outcomes = QueryLoop.each(spark, sfDir, "inspect", names)(inspect(spark, _, _))
     spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    if (outcomes.exists(_.result.isLeft)) sys.exit(1)
   }
 
-  /** Plan, timings and stage table of one query; false if it failed. */
-  private def inspect(spark: SparkSession, sfDir: String, n: String): Boolean = {
-    val fn = SparkEntry.queries(n)
-    def run(): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+  /** Plan, timings and stage table of one (already staged) query. */
+  private def inspect(spark: SparkSession, n: String, build: () => DataFrame): Unit = {
+    def run() = QueryLoop.timeFull(build())
     println(s"==== $n")
-    try {
-      SparkEntry.staging.get(n).foreach(_(spark, sfDir))
-      println(fn(spark, sfDir).queryExecution.explainString(FormattedMode))
-      val cold = run()
-      val listener = new StageListener
-      val warm = Seq(run(), run(), {
-        spark.sparkContext.addSparkListener(listener)
-        try run() finally {
-          listener.settle(); spark.sparkContext.removeSparkListener(listener)
-        }
-      })
-      println(f"  noop sink: cold=$cold%.2f s  warm=${warm.map(w => f"$w%.2f").mkString(" ")} s  min=${warm.min}%.2f s")
-      println("  stage tasks  wall_ms  run_ms  cpu_ms   gc_ms   max_ms  med_ms    input   shufR   shufW  name")
-      listener.stages.values.toSeq.sortBy(-_.wallMs).foreach { r =>
-        val med = if (r.times.isEmpty) 0L else r.times.sorted.apply(r.times.size / 2)
-        def mb(b: Long) = f"${b / 1048576.0}%7.1f"
-        println(f"  ${r.id}%5d ${r.tasks}%5d ${r.wallMs}%8d ${r.runMs}%7d ${r.cpuNs / 1000000}%7d ${r.gcMs}%7d ${r.maxMs}%8d ${med}%7d ${mb(r.inputB)} ${mb(r.srB)} ${mb(r.swB)}  ${r.name.take(60)}")
+    println(build().queryExecution.explainString(FormattedMode))
+    val cold = run()
+    val listener = new StageListener
+    val warm = Seq(run(), run(), {
+      spark.sparkContext.addSparkListener(listener)
+      try run() finally {
+        listener.settle(); spark.sparkContext.removeSparkListener(listener)
       }
-      val serial = listener.stages.values.toSeq.sortBy(_.id).filter(r =>
-        r.wallMs >= SerialWallMs && r.runMs > 0 && r.maxMs >= SerialShare * r.runMs)
-      println("  serial: " + (if (serial.isEmpty) "none" else serial.map(r =>
-        s"stage ${r.id} (${r.maxMs} of ${r.runMs} ms in 1 of ${r.tasks} tasks)")
-        .mkString(", ")))
-      true
-    } catch { case e: Throwable =>
-      println(s"  FAILED: ${e.getMessage}"); false
+    })
+    println(f"  noop sink: cold=$cold%.2f s  warm=${warm.map(w => f"$w%.2f").mkString(" ")} s  min=${warm.min}%.2f s")
+    println("  stage tasks  wall_ms  run_ms  cpu_ms   gc_ms   max_ms  med_ms    input   shufR   shufW  name")
+    listener.stages.values.toSeq.sortBy(-_.wallMs).foreach { r =>
+      val med = if (r.times.isEmpty) 0L else r.times.sorted.apply(r.times.size / 2)
+      def mb(b: Long) = f"${b / 1048576.0}%7.1f"
+      println(f"  ${r.id}%5d ${r.tasks}%5d ${r.wallMs}%8d ${r.runMs}%7d ${r.cpuNs / 1000000}%7d ${r.gcMs}%7d ${r.maxMs}%8d ${med}%7d ${mb(r.inputB)} ${mb(r.srB)} ${mb(r.swB)}  ${r.name.take(60)}")
     }
+    val serial = listener.stages.values.toSeq.sortBy(_.id).filter(r =>
+      r.wallMs >= SerialWallMs && r.runMs > 0 && r.maxMs >= SerialShare * r.runMs)
+    println("  serial: " + (if (serial.isEmpty) "none" else serial.map(r =>
+      s"stage ${r.id} (${r.maxMs} of ${r.runMs} ms in 1 of ${r.tasks} tasks)")
+      .mkString(", ")))
   }
 }

@@ -113,7 +113,7 @@ object OpBench {
         date_format(max(col("o_orderdate")), "yyyy-MM-dd"),
         count(cents), countDistinct(cents),
         min(cents).cast("string"), max(cents).cast("string")).collect(),
-      () => SparkEntry.queries("qA2_column_profile")(s, dir).collect())
+      () => graft.queries.Relational2.queries("qA2_column_profile")(s, dir).collect())
   }
 
   /** Base hash H(s) on the minhash path (every dedup query's hottest

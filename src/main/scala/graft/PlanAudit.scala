@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+
 /** Plan-discipline audit (builder brief: ".explain('formatted') the
   * plan and iterate until it's the plan you'd want"): for every
   * registered query, count exchanges / codegen spans and check that
@@ -29,21 +32,17 @@ object PlanAudit {
     sb ++= "| query | exchanges | codegen spans | scans | pushed | widest scan cols |\n"
     sb ++= "|---|---|---|---|---|---|\n"
 
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.executedPlan
-        import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
-        import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-        val exchanges = plan.collect { case e: ShuffleExchangeLike => e }.size
-        val codegen = plan.collect { case w: WholeStageCodegenExec => w }.size
-        val scans = plan.collect { case f: FileSourceScanExec => f }
-        val pushed = scans.count(_.metadata.get("PushedFilters").exists(_ != "[]"))
-        val widest = scans.map(_.requiredSchema.length).sorted.lastOption.getOrElse(0)
-        sb ++= s"| $name | $exchanges | $codegen | ${scans.size} | $pushed | $widest |\n"
-      } catch {
-        case e: Throwable => sb ++= s"| $name | ERROR ${e.getClass.getSimpleName} | | | | |\n"
-      }
+    val names = QueryLoop.selectOrExit("planaudit", Nil)
+    QueryLoop.each(spark, sfDir, "planaudit", names) { (name, build) =>
+      val plan = build().queryExecution.executedPlan
+      val exchanges = plan.collect { case e: ShuffleExchangeLike => e }.size
+      val codegen = plan.collect { case w: WholeStageCodegenExec => w }.size
+      val scans = plan.collect { case f: FileSourceScanExec => f }
+      val pushed = scans.count(_.metadata.get("PushedFilters").exists(_ != "[]"))
+      val widest = scans.map(_.requiredSchema.length).sorted.lastOption.getOrElse(0)
+      s"| $name | $exchanges | $codegen | ${scans.size} | $pushed | $widest |\n"
+    }.foreach { o =>
+      sb ++= o.result.fold(e => s"| ${o.name} | ERROR ${e.getClass.getSimpleName} | | | | |\n", identity)
     }
     Files.writeString(Paths.get(outFile), sb.toString)
     println(s"wrote $outFile")

@@ -45,10 +45,10 @@ object SparkEntry {
     modules.map(_._2).reduce(_ ++ _)
 
   /** One-time fixture staging per query (layout writes, stream
-    * drains), memoized per JVM by graft.io.Staging. Bench runs these
-    * ahead of its per-query timer and reports them as stage_s;
-    * queries remain self-contained for every other caller (first call
-    * stages inline). */
+    * drains), memoized per JVM by graft.io.Staging. QueryLoop runs
+    * these ahead of each key's body and times them apart (Bench's
+    * `staging`); queries remain self-contained for every other caller
+    * (first call stages inline). */
   def staging: Map[String, (SparkSession, String) => Unit] =
     IoQueries.staging ++ EventQueries.staging ++ DedupSim.staging ++
       GraphQueries.staging

@@ -46,7 +46,7 @@ import graft.io.CheckpointStrategy
   * hitting the cap raises rather than returning a half-converged
   * labeling.
   */
-object Components {
+object Components extends org.apache.spark.internal.Logging {
 
   /** Labels every id in `vertices(idCol)` with the smallest id
     * reachable through `pairs` (columns id1/id2, undirected, need not
@@ -172,10 +172,9 @@ object Components {
         prevSum = sumNow
         labels = step
         round += 1
-        // env-guarded round trace: convergence pathologies (the sf10
-        // qC1 non-convergence) are invisible without per-round sums
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(s"[cc] round=$round labelSum=$sumNow")
+        // convergence pathologies (the sf10 qC1 non-convergence) are
+        // invisible without per-round sums
+        logDebug(s"[cc] round=$round labelSum=$sumNow")
       }
     } finally edges.unpersist() // also on mid-loop job failure
     val out = vertices.select(col(idCol))

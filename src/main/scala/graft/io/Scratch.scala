@@ -172,8 +172,8 @@ object Scratch {
     spark
   }
 
-  /** Per-query sweep for long runs (Bench / Verify under
-    * `SPARK_GRAFT_GC_EACH=1`). System.gc() alone lets localCheckpoint
+  /** Per-query sweep for long runs, called by graft.QueryLoop after
+    * every key under `SPARK_GRAFT_GC_EACH=1`. System.gc() alone lets localCheckpoint
     * blocks from COMPLETED queries survive until the ContextCleaner
     * notices their RDD objects are unreachable — on the sf10 spot
     * sweep the accumulation OOMed the shared 32g JVM in the RETRY pass

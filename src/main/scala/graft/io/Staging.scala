@@ -12,11 +12,11 @@ package graft.io
   * rounds on identical binaries. Queries route their setup through
   * [[once]]: the first call per (key, JVM) runs the staging and
   * caches its result (a path or table/sink name); subsequent calls
-  * return the cached value without touching storage. Bench invokes
-  * the staging pass BEFORE starting the per-query timer (reported
-  * separately as `stage_s`), so the timed region is query-only;
-  * Verify and ad-hoc callers need no pre-pass — their first query
-  * call stages inline, and correctness is identical either way.
+  * return the cached value without touching storage. graft.QueryLoop
+  * runs the staging pass BEFORE each key's body and times it apart
+  * (Bench's `staging`), so Bench's timed region is query-only; ad-hoc
+  * callers need no pre-pass — their first query call stages inline,
+  * and correctness is identical either way.
   */
 object Staging {
   private val cache = scala.collection.concurrent.TrieMap[String, String]()

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Files.createTempDirectory-based fixture staging lands on the same
   * tier without each call site knowing the policy. Also pins the one
   * session factory, [[Scratch.builder]], that no other main source
-  * builds a session, and that no main source outside
-  * [[CheckpointStrategy]] (and OpBench) checkpoints directly. */
+  * builds a session, that only graft.QueryLoop walks the query
+  * registry, and that no main source outside [[CheckpointStrategy]]
+  * (and OpBench) checkpoints directly. */
 class ScratchSpec extends AnyFunSuite {
 
   test("root is a writable directory and prefers the RAM tier when present") {
@@ -81,6 +82,13 @@ class ScratchSpec extends AnyFunSuite {
     val sites = mainSourcesContaining("SparkSession.builder")
     assert(sites == Seq("graft/io/Scratch.scala"),
       s"every main builds its session through io.Scratch.session; found $sites")
+  }
+
+  test("only QueryLoop walks the query registry and its staging") {
+    val sites = mainSourcesContaining("SparkEntry.queries", "SparkEntry.staging")
+      .filterNot(_ == "graft/SparkEntry.scala")
+    assert(sites == Seq("graft/QueryLoop.scala"),
+      s"mains select, stage and run registry keys through graft.QueryLoop; found $sites")
   }
 
   test("checkpoint calls appear only in io/Checkpoint.scala and OpBench") {
