@@ -3,17 +3,11 @@ package graft
 /** Full-surface timing: `SPARK_GRAFT_SF_DIR=<sfDir> graft.Bench [name…]`
   * (every query when no name is given). Each key's time is
   * [[QueryLoop.timeFull]]: build plus whole result to a `noop` sink,
-  * with its staging reported apart as `staging`. A failed key records
-  * -1 and makes the total -1, so a breakage cannot shrink the total. */
+  * with its staging reported apart as `staging`. Every key reports its
+  * one run, so the total sums runs of one kind (each key's first, cold
+  * in this JVM). A failed key records -1 and makes the total -1, so a
+  * breakage cannot shrink the total. */
 object Bench {
-  /** Host-stall adjudication: a row at least [[RetryS]] slow is re-run
-    * once in the same JVM, and both runs are emitted under `retried`.
-    * The row adopts the retry only when the first run is more than
-    * [[StallRatio]] times slower (a stall-sized gap); within that band
-    * the first run stands, since the retry always runs warmer. */
-  private val RetryS = 2.5
-  private val StallRatio = 2.0
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = QueryLoop.selectOrExit("bench", args.toSeq)
@@ -24,37 +18,21 @@ object Bench {
       .groupBy("l_returnflag").count().count()
     catch { case _: Throwable => () }
 
-    def timeEach(tag: String, keys: Seq[String]) =
-      QueryLoop.each(spark, sfDir, tag, keys) { (name, build) =>
-        val s = QueryLoop.timeFull(build())
-        // progress on stderr: a run killed mid-sweep shows where it died
-        System.err.println(f"[$tag] $name%s $s%.2f s")
-        s
-      }
-    def secs(o: QueryLoop.Outcome[Double]) = o.result.getOrElse(-1.0)
-    val results = timeEach("bench", names)
-    // a failed retry keeps -1 as its second measurement, so it cannot
-    // read as a confirming re-run
-    val retries = timeEach("bench retry",
-      results.filter(secs(_) >= RetryS).map(_.name))
-      .map(o => o.name -> secs(o)).toMap
-    val adjudicated = results.map { o =>
-      val t = secs(o)
-      val adj = retries.get(o.name).filter(t2 => t2 >= 0 && t > StallRatio * t2)
-      (o.name, adj.getOrElse(t), o.stageS, retries.get(o.name).map(t -> _))
-    }
-    val qs = adjudicated.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
+    val results = QueryLoop.each(spark, sfDir, "bench", names) { (name, build) =>
+      val s = QueryLoop.timeFull(build())
+      // progress on stderr: a run killed mid-sweep shows where it died
+      System.err.println(f"[bench] $name%s $s%.2f s")
+      s
+    }.map(o => (o.name, o.result.getOrElse(-1.0), o.stageS))
+    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val stages = adjudicated.collect { case (k, _, Some(sv), _) => s"\"" + k + "\":" + sv }
+    val stages = results.collect { case (k, _, Some(sv)) => s"\"" + k + "\":" + sv }
       .mkString("{", ",", "}")
-    val retriedFull = adjudicated.collect { case (k, _, _, Some((t1, t2))) =>
-      s"\"" + k + "\":[" + t1 + "," + t2 + "]" }
-      .mkString("{", ",", "}")
-    val failed = adjudicated.collect { case (k, v, _, _) if v < 0 => "\"" + k + "\"" }
-    val total = adjudicated.map(_._2).filter(_ >= 0).sum
+    val failed = results.collect { case (k, v, _) if v < 0 => "\"" + k + "\"" }
+    val total = results.map(_._2).filter(_ >= 0).sum
     val reported = if (failed.nonEmpty) -1.0 else total
     val fullLine =
-      s"""{"metric":"total","value":$reported,"unit":"sec","queries":$qs,"staging":$stages,"retried":$retriedFull,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$reported,"unit":"sec","queries":$qs,"staging":$stages,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}"""
     println(fullLine)
     // the complete per-query record also goes to a file: a capture
     // window can truncate the full line, and run-to-run per-query
@@ -69,18 +47,15 @@ object Bench {
     }
     // compact summary printed LAST, so a tail-anchored capture always
     // keeps the totals and the 10 heaviest queries
-    val stagingTotal = adjudicated.flatMap(_._3).sum
+    val stagingTotal = results.flatMap(_._3).sum
     // Locale.ROOT formatting: the f interpolator uses the default
     // locale, which on comma-decimal hosts emits "1,23" — invalid JSON
     def num(v: Double, scale: Int): String =
       String.format(java.util.Locale.ROOT, s"%.${scale}f", Double.box(v))
-    val top10 = adjudicated.filter(_._2 >= 0).sortBy(-_._2).take(10)
-      .map { case (k, v, _, _) => "\"" + k + "\":" + num(v, 2) }
+    val top10 = results.filter(_._2 >= 0).sortBy(-_._2).take(10)
+      .map { case (k, v, _) => "\"" + k + "\":" + num(v, 2) }
       .mkString("{", ",", "}")
-    val retriedShort = adjudicated.collect { case (k, _, _, Some((t1, t2))) =>
-      s"\"" + k + "\":[" + num(t1, 2) + "," + num(t2, 2) + "]" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"summary","value":$reported,"unit":"sec","n_queries":${adjudicated.size},"n_failed":${failed.size},"query_total_s":${num(total, 1)},"staging_total_s":${num(stagingTotal, 1)},"top10":$top10,"retried":$retriedShort,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}""")
+    println(s"""{"metric":"summary","value":$reported,"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"query_total_s":${num(total, 1)},"staging_total_s":${num(stagingTotal, 1)},"top10":$top10,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

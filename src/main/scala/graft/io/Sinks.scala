@@ -31,33 +31,4 @@ object Sinks {
 
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
-
-  /** Size-targeted parquet write — the small-files guard. A 100 TB
-    * pipeline that writes one file per shuffle partition either
-    * drowns the metastore in KB-files or OOMs on GB-files; this
-    * estimates the frame's size from optimizer statistics (in-memory
-    * estimate — parquet on disk compresses further, so files land AT
-    * or UNDER target) and repartitions to ceil(size/target) writers.
-    * Returns the file count it chose. Round-robin repartition keeps
-    * files even-sized; pass a positive `minFiles` to keep write
-    * parallelism up when the estimate is small. */
-  def writeSizedParquet(
-      df: DataFrame,
-      path: String,
-      targetBytes: Long,
-      minFiles: Int = 1,
-      maxFiles: Int = 100000): Int = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    require(maxFiles >= minFiles && minFiles >= 0,
-      s"need 0 <= minFiles <= maxFiles, got $minFiles/$maxFiles")
-    // stat-less sources (JDBC, LogicalRDD, memory streams) report the
-    // defaultSizeInBytes sentinel (Long.MaxValue) — without the
-    // maxFiles clamp that becomes repartition(Int.MaxValue)
-    val estimated = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = ((estimated + targetBytes - 1) / targetBytes)
-      .max(BigInt(math.max(minFiles, 1)))
-      .min(BigInt(maxFiles)).toInt
-    df.repartition(n).write.mode("overwrite").parquet(path)
-    n
-  }
 }

@@ -14,31 +14,20 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * downstream reach the scan via Catalyst (PushedFilters/ReadSchema).
   */
 object Sources {
-  val tableNames: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Per-JVM memo of each table's INFERRED parquet schema (r16 cold-
-    * floor work): `spark.read.parquet(path)` runs a one-task footer-
-    * read job per call for schema inference — ~30-50 ms of the
-    * ~0.4 s per-query floor, times 1-3 tables per query times 274
-    * queries in a bench sweep. Re-reading with the memoized schema
-    * skips that job and builds a byte-identical relation (same
-    * StructType ⇒ same plan, pruning and pushdown untouched). This is
-    * schema METADATA, not data or results: every query still computes
-    * from the parquet inputs, exactly as a catalog-backed production
-    * table (Iceberg/Hive) would — those never infer per query either.
-    * Keyed by absolute path; files are fixed for a JVM's lifetime
-    * (testdata regeneration always comes with a fresh driver JVM). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
-
-  private def readCached(spark: SparkSession, path: String): DataFrame = {
-    val schema = schemaCache.computeIfAbsent(path,
-      _ => spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
-  }
+  /** Reads with the table's memoized footer schema (r16 cold-floor
+    * work): `spark.read.parquet(path)` runs a one-task footer-read
+    * job per call for schema inference — ~30-50 ms of the ~0.4 s
+    * per-query floor, times 1-3 tables per query times 274 queries
+    * in a bench sweep. Re-reading with the memoized schema skips that
+    * job and builds a byte-identical relation (same StructType ⇒ same
+    * plan, pruning and pushdown untouched). This is schema METADATA,
+    * not data or results: every query still computes from the parquet
+    * inputs, exactly as a catalog-backed production table
+    * (Iceberg/Hive) would — those never infer per query either. The
+    * memo is [[Staging]]'s per-path one, shared with staged fixtures. */
+  private def readCached(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(Staging.schema(path)(spark.read.parquet(path).schema))
+      .parquet(path)
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {

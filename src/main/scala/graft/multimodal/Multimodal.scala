@@ -2,7 +2,6 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing (builder brief): media payloads are
   * opaque `binary` columns with typed metadata; decode / feature
@@ -26,13 +25,6 @@ object Multimodal {
   /** Metadata emitted per decoded media payload. */
   case class MediaMeta(doc_id: Long, width: Int, height: Int,
                        n_frames: Int, format: String)
-
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("n_frames", IntegerType, nullable = false),
-    StructField("format", StringType, nullable = false)))
 
   /** STUB decoder retained ONLY for the video-frame fan-out demo
     * (q61): still-image formats have no frame count, so n_frames is

@@ -132,30 +132,21 @@ object DedupSim {
     * computed once and consumed by every downstream dedup job
     * (clustering, canonical selection, audit), so recomputing it per
     * query mis-models the pipeline and made the trio the bench's
-    * noisiest rows. First caller materializes the pairs to parquet
-    * via [[graft.io.Staging.once]]; later callers scan the staged
-    * copy. Bench pre-stages this (reported under `staging`, not the
-    * query timer); Verify and ad-hoc callers stage inline on first
-    * use — correctness is identical either way. qC1 (round 8) rides
-    * the same build: band keys are per-doc, so its gated-subset edge
-    * list is exactly these pairs semi-joined to the subset ids.
-    */
-  def stagedLshPairs(s: SparkSession, dir: String): DataFrame = {
-    val path = Staging.once(s"lsh_pairs:$dir") {
-      val out = new java.io.File(
-        graft.io.Scratch.root,
-        "graft_lsh_pairs_" + Staging.dirTag(dir)).getAbsolutePath
+    * noisiest rows. Staged once as a parquet [[graft.io.Staging.Fixture]].
+    * qC1 (round 8) rides the same build: band keys are per-doc, so its
+    * gated-subset edge list is exactly these pairs semi-joined to the
+    * subset ids. */
+  private val lshPairs =
+    Staging.fixture("lsh_pairs", "parquet") { (s, dir, out) =>
       val d = table(s, dir, "documents")
         .withColumn("shingles",
           TextStats.shingles(TextStats.tokens(col("text")), 3))
         .select("doc_id", "shingles")
-      Dedup.lshCandidatePairs(
+      val pairs = Dedup.lshCandidatePairs(
         Dedup.minhashBandKeys(d, "doc_id", "shingles", 8, 2), "doc_id")
-        .write.mode("overwrite").parquet(out)
-      out
+      pairs.write.mode("overwrite").parquet(out)
+      pairs
     }
-    s.read.parquet(path)
-  }
 
   /** The full-corpus cluster LABELS (doc_id → cluster_id from the
     * staged pairs' transitive closure) consumed by the dedup
@@ -167,29 +158,24 @@ object DedupSim {
     * operator, so its bench row keeps timing the closure itself
     * (staging away a query's own headline computation would make the
     * row meaningless). Stages NEST: the label build stages the pair
-    * build first (Staging.once is re-entrant by design). */
-  def stagedClusterLabels(s: SparkSession, dir: String): DataFrame = {
-    val path = Staging.once(s"dedup_clusters:$dir") {
-      val out = new java.io.File(
-        graft.io.Scratch.root,
-        "graft_dedup_clusters_" + Staging.dirTag(dir)).getAbsolutePath
-      Components.connectedComponents(
-          stagedLshPairs(s, dir),
-          table(s, dir, "documents").select("doc_id"), "doc_id")
-        .write.mode("overwrite").parquet(out)
-      out
+    * build first (fixtures nest like Staging.once). */
+  private val clusterLabels =
+    Staging.fixture("dedup_clusters", "parquet") { (s, dir, out) =>
+      val labels = Components.connectedComponents(
+        lshPairs.frame(s, dir),
+        table(s, dir, "documents").select("doc_id"), "doc_id")
+      labels.write.mode("overwrite").parquet(out)
+      labels
     }
-    s.read.parquet(path)
-  }
 
   /** Bench pre-pass entries: materialize the shared pair build before
     * the per-query timer (same contract as IoQueries/EventQueries
     * staging). */
   def staging: Map[String, (SparkSession, String) => Unit] = Map(
-    "q74_dedup_clusters" -> ((s, dir) => { stagedLshPairs(s, dir); () }),
-    "qA1_canonical_docs" -> ((s, dir) => { stagedClusterLabels(s, dir); () }),
-    "qF3_split_leakage" -> ((s, dir) => { stagedClusterLabels(s, dir); () }),
-    "qC1_curation_pipeline" -> ((s, dir) => { stagedLshPairs(s, dir); () })
+    "q74_dedup_clusters" -> lshPairs.stage,
+    "qA1_canonical_docs" -> clusterLabels.stage,
+    "qF3_split_leakage" -> clusterLabels.stage,
+    "qC1_curation_pipeline" -> lshPairs.stage
   )
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -418,7 +404,7 @@ object DedupSim {
     "q74_dedup_clusters" -> ((s, dir) => {
       val docs = table(s, dir, "documents")
       Components.connectedComponents(
-        stagedLshPairs(s, dir), docs.select("doc_id"), "doc_id")
+        lshPairs.frame(s, dir), docs.select("doc_id"), "doc_id")
     }),
 
     // q74 carried one step further — the actual keep/drop decision a
@@ -430,7 +416,7 @@ object DedupSim {
     // the same one-row-per-key-per-task shape as q99's compaction.
     "qA1_canonical_docs" -> ((s, dir) => {
       val docs = table(s, dir, "documents")
-      stagedClusterLabels(s, dir)
+      clusterLabels.frame(s, dir)
         .join(docs.select("doc_id", "n_chars"), "doc_id")
         .groupBy("cluster_id")
         .agg(count(lit(1)).as("n_docs"),
@@ -458,7 +444,7 @@ object DedupSim {
     // staged cluster-label table (the closure runs once, in q74's
     // timer / the staging pass) and adds two bounded aggs.
     "qF3_split_leakage" -> ((s, dir) => {
-      val lab = stagedClusterLabels(s, dir)
+      val lab = clusterLabels.frame(s, dir)
         .withColumn("doc_split",
           Dedup.md5Long(col("doc_id").cast("string")) % 10)
         .withColumn("grp_split",
@@ -989,7 +975,7 @@ object DedupSim {
       // build; at 100 TB this is exactly how a curation pass rides
       // the pipeline-wide candidate-edge build.
       val exactIds = exact.select("doc_id")
-      val pairs = stagedLshPairs(s, dir)
+      val pairs = lshPairs.frame(s, dir)
         .join(exactIds.withColumnRenamed("doc_id", "id1"), Seq("id1"), "left_semi")
         .join(exactIds.withColumnRenamed("doc_id", "id2"), Seq("id2"), "left_semi")
         .select("id1", "id2") // USING joins moved the keys first

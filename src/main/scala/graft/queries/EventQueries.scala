@@ -61,22 +61,22 @@ object EventQueries {
   /** qD7: the stream drains into the engine's OWN DataSource V2 sink
     * (graft.io.GenSink, streaming write path) instead of a memory
     * sink — file source → narrow transform → V2 StreamingWrite with
-    * per-epoch deterministic files + checkpoint. Returns the sink
-    * directory the timed query re-reads. */
-  private def stageQD7(s: SparkSession, dir: String): String =
-    Staging.once(s"qD7_v2streamsink:$dir") {
-      val out = graft.io.Scratch.tempDir("graft_qD7_sink")
-      val q = graft.streaming.EventStreams.readEventsStream(
+    * per-epoch deterministic files + checkpoint (kept outside the
+    * sink directory the timed query re-reads as JSONL). */
+  private val qD7Sink =
+    Staging.fixture("qD7_v2streamsink", "json") { (s, dir, out) =>
+      val ev = graft.streaming.EventStreams.readEventsStream(
           s, stageSource(s, dir, "qD7"))
         .select(col("user_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"),
           unix_micros(col("ts")).as("us"))
-        .writeStream.format("graftsink")
-        .option("path", s"$out/events")
-        .option("checkpointLocation", s"$out/chk")
+      val q = ev.writeStream.format("graftsink")
+        .option("path", out)
+        .option("checkpointLocation",
+          graft.io.Scratch.tempDir("graft_qD7_chk"))
         .outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
-      s"$out/events"
+      ev
     }
 
   private def stageQ56(s: SparkSession, dir: String): String =
@@ -169,7 +169,7 @@ object EventQueries {
     "q5D_stream_dedup" -> ((s, dir) => { stageQ5D(s, dir); () }),
     "q82_stream_dedup_watermark" -> ((s, dir) => { stageQ82(s, dir); () }),
     "qBE_stream_session" -> ((s, dir) => { stageQBE(s, dir); () }),
-    "qD7_stream_v2_sink" -> ((s, dir) => { stageQD7(s, dir); () })
+    "qD7_stream_v2_sink" -> qD7Sink.stage
   )
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -179,19 +179,17 @@ object EventQueries {
     // Structured Streaming INTO the engine's own DSv2 sink: stream →
     // narrow transform → GenSink's StreamingWrite (per-epoch
     // deterministic files = idempotent replay, checkpointed; staged)
-    // → schema-inferred re-read → aggregate. The oracle is the batch
-    // twin over the source table, so a lost epoch, duplicated
-    // micro-batch, or serialization drift in the custom sink breaks
-    // the hash — stream/batch equivalence THROUGH the connector
-    // write path.
-    "qD7_stream_v2_sink" -> ((s, dir) => {
-      val p = stageQD7(s, dir)
-      s.read.json(p)
+    // → re-read with the written schema → aggregate. The oracle is
+    // the batch twin over the source table, so a lost epoch,
+    // duplicated micro-batch, or serialization drift in the custom
+    // sink breaks the hash — stream/batch equivalence THROUGH the
+    // connector write path.
+    "qD7_stream_v2_sink" -> ((s, dir) =>
+      qD7Sink.frame(s, dir)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("cents").as("cents"),
           countDistinct("user_id").as("n_users"),
-          min("us").as("min_us"), max("us").as("max_us"))
-    }),
+          min("us").as("min_us"), max("us").as("max_us"))),
 
     // Time-aligned linear interpolation: estimate a reference signal
     // ('click' values) AT the timestamps of a sparse other series

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.dedup.Dedup
 import graft.io.{Sinks, Sources, Staging}
@@ -70,52 +69,45 @@ object IoQueries {
       tag
     }
 
-  /** Date-partitioned layout for q5C, staged once per JVM. */
-  private def stagePartitioned(s: SparkSession, dir: String): String =
-    Staging.once(s"q5C_part:$dir") {
-      val tmp = graft.io.Scratch.tempDir("graft_q5C_part")
-      table(s, dir, "events").withColumn("d", to_date(col("ts")))
-        .write.mode("overwrite").partitionBy("d").parquet(s"$tmp/ev")
-      tmp
+  /** Date-partitioned events for q5C and qA5 (the schema keeps `d`). */
+  private val partitionedEvents =
+    Staging.fixture("q5C_part", "parquet") { (s, dir, out) =>
+      val ev = table(s, dir, "events").withColumn("d", to_date(col("ts")))
+      ev.write.mode("overwrite").partitionBy("d").parquet(out)
+      ev
     }
 
   /** JSONL fixture for q81: the line-delimited JSON layout training
-    * corpora actually ship in, written by the distributed JSON sink.
-    * Returns the staged directory and the schema it was written with:
-    * reading back with that schema needs no inference, which is a
-    * Spark job on every read and drops every column of an empty
-    * input. */
-  private def stageJsonl(s: SparkSession, dir: String): (String, StructType) = {
-    val docs = table(s, dir, "documents")
-      .select(col("doc_id"), col("lang"), col("source"), col("text"))
-    val tmp = Staging.once(s"q81_jsonl:$dir") {
-      val tmp = graft.io.Scratch.tempDir("graft_q81_jsonl")
-      docs.write.mode("overwrite").json(s"$tmp/docs")
-      tmp
+    * corpora actually ship in, written by the distributed JSON sink;
+    * FAILFAST makes a line that does not parse under the written
+    * schema an error instead of a row of nulls. */
+  private val jsonlDocs =
+    Staging.fixture("q81_jsonl", "json", Map("mode" -> "FAILFAST")) {
+      (s, dir, out) =>
+        val docs = table(s, dir, "documents")
+          .select(col("doc_id"), col("lang"), col("source"), col("text"))
+        docs.write.mode("overwrite").json(out)
+        docs
     }
-    (tmp, docs.schema)
-  }
 
   /** ORC fixture for q83 (Spark's second columnar format). */
-  private def stageOrc(s: SparkSession, dir: String): String =
-    Staging.once(s"q83_orc:$dir") {
-      val tmp = graft.io.Scratch.tempDir("graft_q83_orc")
-      table(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          col("o_totalprice"), col("o_orderpriority"))
-        .write.mode("overwrite").orc(s"$tmp/orders")
-      tmp
-    }
+  private val orcOrders = Staging.fixture("q83_orc", "orc") { (s, dir, out) =>
+    val o = table(s, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+        col("o_totalprice"), col("o_orderpriority"))
+    o.write.mode("overwrite").orc(out)
+    o
+  }
 
   /** Spark 4 native XML source fixture: supplier written as nested
-    * <supplier> row elements (schema inferred on read-back). */
-  private def stageXml(s: SparkSession, dir: String): String =
-    Staging.once(s"qB9_xml:$dir") {
-      val tmp = graft.io.Scratch.tempDir("graft_qB9_xml")
-      table(s, dir, "supplier")
-        .write.mode("overwrite").format("xml")
-        .option("rowTag", "supplier").save(s"$tmp/supplier")
-      tmp
+    * <supplier> row elements. */
+  private val xmlSuppliers =
+    Staging.fixture("qB9_xml", "xml", Map("rowTag" -> "supplier")) {
+      (s, dir, out) =>
+        val sup = table(s, dir, "supplier")
+        sup.write.mode("overwrite").format("xml")
+          .option("rowTag", "supplier").save(out)
+        sup
     }
 
   /** Schema-evolution fixture: the same fact written by two pipeline
@@ -154,16 +146,15 @@ object IoQueries {
   }
 
   /** V2-sink fixture for qD5: orders written through the engine's own
-    * DataSource V2 write connector (graft.io.GenSink). */
-  private def stageV2Sink(s: SparkSession, dir: String): String =
-    Staging.once(s"qD5_v2sink:$dir") {
-      val tmp = graft.io.Scratch.tempDir("graft_qD5_sink")
-      table(s, dir, "orders")
+    * DataSource V2 write connector (graft.io.GenSink), read back as
+    * the JSONL it emits. */
+  private val sinkOrders =
+    Staging.fixture("qD5_v2sink", "json") { (s, dir, out) =>
+      val o = table(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderpriority"))
-        .write.format("graftsink").option("path", s"$tmp/orders")
-        .mode("overwrite").save()
-      tmp
+      o.write.format("graftsink").option("path", out).mode("overwrite").save()
+      o
     }
 
   /** Distributed binary export for qE9: one opaque .bin file per
@@ -193,15 +184,15 @@ object IoQueries {
   /** Staging hooks Bench runs ahead of the per-query timer. */
   def staging: Map[String, (SparkSession, String) => Unit] = Map(
     "qE9_binary_files" -> ((s, dir) => { stageBinary(s, dir); () }),
-    "qD5_dsv2_sink" -> ((s, dir) => { stageV2Sink(s, dir); () }),
+    "qD5_dsv2_sink" -> sinkOrders.stage,
     "q57_csv_roundtrip" -> ((s, dir) => { stageCsv(s, dir); () }),
-    "qB9_xml_roundtrip" -> ((s, dir) => { stageXml(s, dir); () }),
+    "qB9_xml_roundtrip" -> xmlSuppliers.stage,
     "qC3_schema_evolution" -> ((s, dir) => { stageEvolved(s, dir); () }),
     "q5B_bucketed_join" -> ((s, dir) => { stageBucketed(s, dir); () }),
-    "q5C_partition_prune" -> ((s, dir) => { stagePartitioned(s, dir); () }),
-    "qA5_dynamic_prune" -> ((s, dir) => { stagePartitioned(s, dir); () }),
-    "q81_jsonl_roundtrip" -> ((s, dir) => { stageJsonl(s, dir); () }),
-    "q83_orc_roundtrip" -> ((s, dir) => { stageOrc(s, dir); () })
+    "q5C_partition_prune" -> partitionedEvents.stage,
+    "qA5_dynamic_prune" -> partitionedEvents.stage,
+    "q81_jsonl_roundtrip" -> jsonlDocs.stage,
+    "q83_orc_roundtrip" -> orcOrders.stage
   )
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -210,6 +201,9 @@ object IoQueries {
     // aggregate. The oracle reads parquet directly, so any loss or
     // type drift in the CSV layer still breaks the hash.
     "q57_csv_roundtrip" -> ((s, dir) => {
+      // inferred on purpose, not a Staging.Fixture: header +
+      // inferSchema is the reference's read shape and its type drift
+      // is what this query checks
       val tmp = stageCsv(s, dir)
       Sinks.readCsv(s, tmp)
         .groupBy("o_orderstatus")
@@ -494,43 +488,35 @@ object IoQueries {
     // write (staged) → re-read with the staged schema → aggregate.
     // The oracle reads parquet directly, so any escaping/unicode/type
     // loss in the JSON layer breaks the hash — the losslessness
-    // check for the format most raw training corpora arrive in;
-    // FAILFAST makes a line that does not parse under the schema an
-    // error instead of a row of nulls.
-    "q81_jsonl_roundtrip" -> ((s, dir) => {
-      val (tmp, schema) = stageJsonl(s, dir)
-      s.read.schema(schema).option("mode", "FAILFAST").json(s"$tmp/docs")
+    // check for the format most raw training corpora arrive in.
+    "q81_jsonl_roundtrip" -> ((s, dir) =>
+      jsonlDocs.frame(s, dir)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
           sum("doc_id").as("sum_ids"),
           sum(length(col("text"))).as("sum_chars"),
-          countDistinct("source").as("n_sources"))
-    }),
+          countDistinct("source").as("n_sources"))),
 
     // ORC round-trip: same losslessness contract through Spark's
     // second columnar format (doubles + strings re-read bit-exact;
     // oracle is parquet-direct).
-    "q83_orc_roundtrip" -> ((s, dir) => {
-      val tmp = stageOrc(s, dir)
-      s.read.orc(s"$tmp/orders")
+    "q83_orc_roundtrip" -> ((s, dir) =>
+      orcOrders.frame(s, dir)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           sum(round(col("o_totalprice") * 100).cast("long")).as("cents"),
           countDistinct("o_custkey").as("n_cust"),
-          countDistinct("o_orderpriority").as("n_prio"))
-    }),
+          countDistinct("o_orderpriority").as("n_prio"))),
 
     // Partitioned write + partition-pruned scan: a date-partitioned
     // layout turns the day filter into directory pruning
     // (PartitionedWriteSpec asserts partitionFilters; this query
     // makes the layout driver-checkable end-to-end).
-    "q5C_partition_prune" -> ((s, dir) => {
-      val tmp = stagePartitioned(s, dir)
-      s.read.parquet(s"$tmp/ev")
+    "q5C_partition_prune" -> ((s, dir) =>
+      partitionedEvents.frame(s, dir)
         .filter(col("d") === lit(java.sql.Date.valueOf("2024-01-05")))
         .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), countDistinct("user_id").as("n_users"))
-    }),
+        .agg(count(lit(1)).as("n"), countDistinct("user_id").as("n_users"))),
 
     // DYNAMIC partition pruning — q5C's static literal replaced by a
     // dim-side predicate only known at RUN time: "days strictly
@@ -545,8 +531,7 @@ object IoQueries {
     // At 100 TB this is the difference between reading 3 days and 3
     // years when the qualifying set isn't a compile-time constant.
     "qA5_dynamic_prune" -> ((s, dir) => {
-      val tmp = stagePartitioned(s, dir)
-      s.read.parquet(s"$tmp/ev").createOrReplaceTempView("graft_qa5_fact")
+      partitionedEvents.frame(s, dir).createOrReplaceTempView("graft_qa5_fact")
       table(s, dir, "events").withColumn("d", to_date(col("ts")))
         .createOrReplaceTempView("graft_qa5_events")
       s.sql("""
@@ -598,22 +583,19 @@ object IoQueries {
     }),
 
     // Spark 4 NATIVE XML source (spark-xml graduated into core):
-    // parquet → <supplier> row-element files (staged) → schema-
-    // inferred read-back → aggregate. The oracle reads parquet
-    // directly, so inference drift (s_nationkey widens to long — we
-    // pin it) or double-format loss in the XML text layer breaks the
-    // hash, same contract as the CSV/JSONL/ORC round-trips.
-    "qB9_xml_roundtrip" -> ((s, dir) => {
-      val tmp = stageXml(s, dir)
-      s.read.format("xml").option("rowTag", "supplier")
-        .load(s"$tmp/supplier")
+    // parquet → <supplier> row-element files (staged) → read-back with
+    // the written schema → aggregate. The oracle reads parquet
+    // directly, so a value or double-format loss in the XML text
+    // layer breaks the hash, same contract as the JSONL/ORC
+    // round-trips.
+    "qB9_xml_roundtrip" -> ((s, dir) =>
+      xmlSuppliers.frame(s, dir)
         .select(col("s_nationkey").cast("long").as("s_nationkey"),
           col("s_name"), col("s_acctbal"))
         .groupBy("s_nationkey")
         .agg(count(lit(1)).as("n_supp"),
           sum(round(col("s_acctbal") * 100).cast("long")).as("acct_cents"),
-          max(length(col("s_name"))).as("max_name_len"))
-    }),
+          max(length(col("s_name"))).as("max_name_len"))),
 
     // Schema evolution across pipeline generations: two parquet
     // directories — one written BEFORE a column existed — read as one
@@ -625,6 +607,8 @@ object IoQueries {
     // dropped column, a type widen, or misattributed NULLs all break
     // the hash.
     "qC3_schema_evolution" -> ((s, dir) => {
+      // inferred on purpose, not a Staging.Fixture: the mergeSchema
+      // footer union is the feature under test
       val tmp = stageEvolved(s, dir)
       s.read.option("mergeSchema", "true").parquet(tmp)
         .groupBy("gen")
@@ -636,20 +620,18 @@ object IoQueries {
 
     // DataSource V2 WRITE connector (graft.io.GenSink): parquet →
     // the engine's own V2 sink (per-partition DataWriters, driver
-    // commit, JSONL bytes; staged) → schema-inferred re-read →
-    // aggregate. The oracle reads parquet directly, so any loss in
+    // commit, JSONL bytes; staged) → re-read with the written schema
+    // → aggregate. The oracle reads parquet directly, so any loss in
     // the sink's serialization, escaping, or commit protocol breaks
     // the hash — the q57 losslessness contract applied to the
     // connector write path.
-    "qD5_dsv2_sink" -> ((s, dir) => {
-      val tmp = stageV2Sink(s, dir)
-      s.read.json(s"$tmp/orders")
+    "qD5_dsv2_sink" -> ((s, dir) =>
+      sinkOrders.frame(s, dir)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           sum("o_custkey").as("sum_cust"),
           sum(round(col("o_totalprice") * 100).cast("long")).as("cents"),
-          countDistinct("o_orderpriority").as("n_prio"))
-    }),
+          countDistinct("o_orderpriority").as("n_prio"))),
 
     // DataSource V2 custom connector (graft.io.GenSource): the
     // engine's own TableProvider with column pruning, id-range filter

@@ -3,19 +3,21 @@ package graft.io
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Partition pruning = the other half of scan discipline: a
   * date-partitioned layout lets a day filter skip whole directories.
   * At 100 TB this is the difference between listing/reading one day
   * and the full history. */
-class PartitionedWriteSpec extends SparkSpec {
+class PartitionedWriteSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+  private val sf = "/root/testdata/sf0.001"
 
   test("date-partitioned write + day filter prunes partitions at the scan") {
     val dir = Files.createTempDirectory("graft_part").toString
-    val events = Sources.table(spark, "/root/testdata/sf0.001", "events")
+    val events = Sources.table(spark, sf, "events")
       .withColumn("d", to_date(col("ts")))
     events.write.mode("overwrite").partitionBy("d").parquet(s"$dir/ev")
 
@@ -37,7 +39,7 @@ class PartitionedWriteSpec extends SparkSpec {
 
   test("dynamic partition pruning: runtime dim predicate reaches the fact scan") {
     val dir = Files.createTempDirectory("graft_dpp").toString
-    val events = Sources.table(spark, "/root/testdata/sf0.001", "events")
+    val events = Sources.table(spark, sf, "events")
       .withColumn("d", to_date(col("ts")))
     events.write.mode("overwrite").partitionBy("d").parquet(s"$dir/ev")
 
@@ -75,5 +77,22 @@ class PartitionedWriteSpec extends SparkSpec {
     val expected = events.join(dim, "d").groupBy("event_type").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == expected && got.nonEmpty)
+  }
+
+  test("q5C and qA5 prune their own staged partitioned read") {
+    val q5C = SparkEntry.queries("q5C_partition_prune")(spark, sf)
+    assert(q5C.collect().nonEmpty)
+    val scans = collect(q5C.queryExecution.executedPlan) {
+      case f: FileSourceScanExec => f
+    }
+    assert(scans.exists(_.partitionFilters.exists(
+      _.toString.contains("2024-01-05"))),
+      s"expected a 2024-01-05 partition filter, got: ${scans.map(_.partitionFilters)}")
+
+    val qA5 = SparkEntry.queries("qA5_dynamic_prune")(spark, sf)
+    assert(qA5.collect().nonEmpty)
+    val planStr = qA5.queryExecution.executedPlan.toString
+    assert(planStr.toLowerCase.contains("dynamicpruning"),
+      s"expected a dynamicpruning partition filter in:\n$planStr")
   }
 }

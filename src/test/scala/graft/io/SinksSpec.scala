@@ -37,20 +37,4 @@ class SinksSpec extends SparkSpec {
     assert(back.map(_.getLong(0)).toSeq === Seq(1L, 2L))
     assert(back(0).getSeq[String](1) === Seq("a", "b"))
   }
-
-  test("size-targeted parquet write bounds file count and round-trips") {
-    val dir = Files.createTempDirectory("graft_sized").toString
-    val df = spark.range(50000).selectExpr("id", "repeat('x', 100) AS pad")
-      .repartition(32) // worst case: 32 shuffle-partition files without sizing
-    // small target → many files; huge target → exactly one
-    val nSmall = Sinks.writeSizedParquet(df, s"$dir/small", 1L << 17)
-    val nOne = Sinks.writeSizedParquet(df, s"$dir/one", 1L << 40)
-    assert(nOne === 1)
-    assert(nSmall > 1 && nSmall < 32, s"expected 1 < n < 32, got $nSmall")
-    def files(p: String) = new java.io.File(p).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(files(s"$dir/one") === 1)
-    assert(files(s"$dir/small") === nSmall)
-    assert(spark.read.parquet(s"$dir/small").count() === 50000)
-  }
 }

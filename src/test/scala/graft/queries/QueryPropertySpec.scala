@@ -702,39 +702,31 @@ class QueryPropertySpec extends SparkSpec {
   private val Iterative = "iterative core: per-round CheckpointStrategy materialization"
   private val Kept = "kept CheckpointStrategy materialization"
   private val Collect = "collect or count at build"
-  private val RoundTrip = "round-trip schema inference"
+  private val RoundTrip = "round-trip schema inference, kept on purpose"
   private val buildJobKeys: Map[String, String] = Map(
     "q106_rfm_segmentation" -> Kept, // DistributedRank, ×3 quartiles
     "q108_zipf_slope" -> Kept, // DistributedRank
-    "q11B_adamic_adar" -> RoundTrip, // staged co-order edges
     "q126_bradley_terry" -> Kept,
     "q132_dedup_threshold_pr" -> Kept,
     "q44_jaccard_pairs" -> Iterative, // PPJoin prefix base
-    "q57_csv_roundtrip" -> RoundTrip,
-    "q5C_partition_prune" -> RoundTrip,
+    "q57_csv_roundtrip" -> RoundTrip, // the reference's inferred CSV read
     "q74_dedup_clusters" -> Iterative, // connected components
     "q7B_stratified_sample" -> Kept,
     "q84_bloom_membership" -> Kept, // and the sketch collect
     "q98_minhash_jaccard" -> Kept,
-    "qA1_canonical_docs" -> RoundTrip, // staged cluster labels
     "qA3_pagerank" -> Iterative,
-    "qA5_dynamic_prune" -> RoundTrip,
     "qA9_curriculum_bins" -> Kept, // DistributedRank
     "qB2_triangle_count" -> Iterative,
     "qB4_sparse_cosine" -> Collect, // corpus size for the fan-out width
     "qB7_recursive_cte" -> Kept,
-    "qB9_xml_roundtrip" -> RoundTrip,
     "qBD_kcenter_coreset" -> Iterative,
     "qC1_curation_pipeline" -> Iterative, // connected components
-    "qC3_schema_evolution" -> RoundTrip,
-    "qD5_dsv2_sink" -> RoundTrip,
-    "qD7_stream_v2_sink" -> RoundTrip,
+    "qC3_schema_evolution" -> RoundTrip, // the mergeSchema footer union
     "qDB_frequent_pairs" -> Kept,
     "qE2_equidepth_hist" -> Kept, // DistributedRank
     "qE5_naive_bayes" -> Kept,
     "qE8_kcore" -> Iterative,
-    "qEA_bloom_join" -> Collect, // the bloom sketch
-    "qF3_split_leakage" -> RoundTrip // staged cluster labels
+    "qEA_bloom_join" -> Collect // the bloom sketch
   )
 
   test("build-job census: only the pinned keys run jobs while being built") {

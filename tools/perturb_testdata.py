@@ -26,8 +26,13 @@ Modes:
                  the observed range.
              Keys, FKs, row counts and schemas are untouched, so
              every join/oracle stays well-defined.
+  empty    — every table rewritten with zero rows and an identical
+             schema: the degenerate input a filtered or freshly
+             created upstream hands over.  A failure here is a query
+             that needs rows to plan (schema inference on a staged
+             re-read) or that disagrees with SQL on empty aggregates.
 
-Usage: python3 tools/perturb_testdata.py SRC_DIR DST_DIR [shuffle|jitter] [seed]
+Usage: python3 tools/perturb_testdata.py SRC_DIR DST_DIR [shuffle|jitter|empty] [seed]
 """
 import sys
 import numpy as np
@@ -110,14 +115,17 @@ def main():
     dst.mkdir(parents=True, exist_ok=True)
     for f in sorted(src.glob("*.parquet")):
         t = pq.read_table(f)
-        if mode == "jitter":
+        if mode == "empty":
+            t = t.schema.empty_table()
+        elif mode == "jitter":
             if f.stem == "events":
                 t = jitter_events(t, rng)
             elif f.stem == "lineitem":
                 t = jitter_money(t, rng, ["l_extendedprice", "l_discount", "l_tax"])
             elif f.stem == "orders":
                 t = jitter_money(t, rng, ["o_totalprice"])
-        t = shuffled(t, rng)
+        if mode != "empty":
+            t = shuffled(t, rng)
         # small row groups => more Spark input splits => different
         # task order than the pristine single-group file
         pq.write_table(t, dst / f.name, row_group_size=max(1000, t.num_rows // 7))
