@@ -18,9 +18,10 @@ import graft.text.{EntityRuler, Sentiment, TextStats}
   * the full 25,456-pattern spaCy dictionary with `read_json` and
   * resolves longest-match via a first-token equi-join
   * ([[nerFullDictOracleSql]]) — no generated CASE arms, so the oracle
-  * scales to the production dictionary.
+  * scales to the production dictionary. Where the dictionary is not
+  * mounted, q38 is q30 and is checked against q30's oracle.
   */
-object TextQueries {
+object TextQueries extends org.apache.spark.internal.Logging {
 
   /** Committed demo pattern set over the documents vocabulary:
     * exercises multi-token LOWER patterns, longest-match priority,
@@ -236,27 +237,15 @@ object TextQueries {
 
     // NER trie matcher (broadcast-dictionary extraction), hash-checked
     // against the generated recursive-CTE oracle.
-    "q30_ner_topics" -> ((s, dir) => {
-      val m = new EntityRuler.Matcher(demoPatterns)
-      table(s, dir, "documents")
-        .select(col("doc_id"),
-          concat_ws(",", EntityRuler.nerColumn(m)(col("text"))).as("topics"))
-    }),
+    "q30_ner_topics" -> ((s, dir) => nerTopics(s, dir, demoPatterns)),
 
     // NER with the FULL reference dictionary (25k spaCy patterns)
     // when the reference tree is mounted — exercises the broadcast
-    // trie at production dictionary size; falls back to the demo
-    // patterns otherwise. Hash-checked per doc against the
-    // data-driven DuckDB mirror (nerFullDictOracleSql).
-    "q38_ner_full_dict" -> ((s, dir) => {
-      val pats =
-        if (new java.io.File(patternsPath).exists()) EntityRuler.loadPatternsJsonl(patternsPath)
-        else demoPatterns
-      val m = new EntityRuler.Matcher(pats)
-      table(s, dir, "documents")
-        .select(col("doc_id"),
-          concat_ws(",", EntityRuler.nerColumn(m)(col("text"))).as("topics"))
-    }),
+    // trie at production dictionary size; hash-checked per doc against
+    // the data-driven DuckDB mirror (nerFullDictOracleSql). Without
+    // the mount it is q30, checked against q30's oracle.
+    "q38_ner_full_dict" -> ((s, dir) => nerTopics(s, dir,
+      fullDictPatterns.fold { warnDemoFallback; demoPatterns }(EntityRuler.loadPatternsJsonl))),
 
     // Lexicon sentiment with prev-token negator/intensifier handling;
     // integer per-mille arithmetic → bit-stable vs the SQL oracle.
@@ -672,6 +661,25 @@ object TextQueries {
     * the assignment's own data — read at runtime, never vendored). */
   private val patternsPath = "/root/reference/NER_model/entity_ruler/patterns.jsonl"
 
+  /** The spaCy dictionary's path when it is mounted: the one decision
+    * q38's query and its oracle both read. */
+  private[queries] def fullDictPatterns: Option[String] =
+    Some(patternsPath).filter(new java.io.File(_).exists())
+
+  /** Logged once per JVM, when q38 is built without the dictionary. */
+  private lazy val warnDemoFallback: Unit =
+    logWarning(s"q38_ner_full_dict: $patternsPath is not mounted; q38 " +
+      "runs q30's demo patterns and is checked against q30's oracle")
+
+  /** `doc_id` and the comma-joined NER topics of each document. */
+  private def nerTopics(s: SparkSession, dir: String,
+      patterns: Seq[EntityRuler.Pattern]): DataFrame = {
+    val m = new EntityRuler.Matcher(patterns)
+    table(s, dir, "documents")
+      .select(col("doc_id"),
+        concat_ws(",", EntityRuler.nerColumn(m)(col("text"))).as("topics"))
+  }
+
   private[queries] def sq(s: String): String = "'" + s.replace("'", "''") + "'"
 
   /** CASE expression translating [[Sentiment.lexicon]] to SQL. */
@@ -706,6 +714,11 @@ object TextQueries {
     * and the first-occurrence dedup + ['empty'] sentinel mirror
     * EntityRuler.scala's contract. */
   private[queries] lazy val nerWalkSql: String = nerWalkSqlFrom("documents")
+
+  /** q30's oracle: [[nerWalkSql]]'s phrases, comma-joined. */
+  private[queries] lazy val nerTopicsOracleSql: String =
+    s"""WITH RECURSIVE $nerWalkSql
+        SELECT doc_id, array_to_string(phrases, ',') AS topics FROM phrases"""
 
   /** As [[nerWalkSql]] with the document source relation
     * parameterized — the pipeline oracles walk a SAMPLED subset. */
@@ -1052,10 +1065,9 @@ object TextQueries {
          FROM a JOIN b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
          GROUP BY a.doc_id""",
 
-    "q30_ner_topics" ->
-      s"""WITH RECURSIVE $nerWalkSql
-          SELECT doc_id, array_to_string(phrases, ',') AS topics FROM phrases""",
-    "q38_ner_full_dict" -> nerFullDictOracleSql,
+    "q30_ner_topics" -> nerTopicsOracleSql,
+    "q38_ner_full_dict" ->
+      (if (fullDictPatterns.isDefined) nerFullDictOracleSql else nerTopicsOracleSql),
     "q31_sentiment_docs" -> sentimentOracleSql,
     "q39_sentiment_native" -> sentimentOracleSql,
 

@@ -8,8 +8,8 @@
 #
 # Usage: tools/close_round.sh <tag> [steps]
 #   tag    e.g. r12 — names the transcript dir tmp/close_<tag>/
-#   steps  comma list, default "test,oracle001,shuffle,jitter,bench,plans"
-#          test      sbt -batch test                       (suite green)
+#   steps  comma list, default "test,oracle001,shuffle,jitter,bench"
+#          test      sbt -batch test    (suite green, PLANS.md rows too)
 #          oracle001 Verify + check_oracles at sf0.01      (PASS N/0)
 #          shuffle   row-shuffled sf0.01 copy sweep        (PASS N/0)
 #          jitter    boundary-jittered copies, seeds 42+7  (PASS N/0 ×2)
@@ -17,11 +17,10 @@
 #          sf10     wave-partitioned oracle sweep at tmp/sf10 against
 #                    tmp/v_sf10 engine outputs (SLOW: hours; see below)
 #          bench     graft.Bench ×2 at sf0.1               (2 JSON lines)
-#          plans     PlanAudit regen + git diff check      (0 drift)
 #
 # sf1/sf10 are NOT in the default list (they dominate wall time); the
 # full close is:
-#   tools/close_round.sh r13 test,oracle001,shuffle,jitter,sf1,bench,plans
+#   tools/close_round.sh r13 test,oracle001,shuffle,jitter,sf1,bench
 # and the decade certification (separately, engine outputs first):
 #   SPARK_GRAFT_SCRATCH_DIR=tmp/scratch SPARK_GRAFT_GC_EACH=1 \
 #     tools/run_main.sh graft.Verify tmp/sf10 tmp/v_sf10   # hours
@@ -41,7 +40,7 @@ set -uo pipefail
 cd "$(dirname "$0")/.."
 
 TAG="${1:?usage: tools/close_round.sh <tag> [steps]}"
-STEPS="${2:-test,oracle001,shuffle,jitter,bench,plans}"
+STEPS="${2:-test,oracle001,shuffle,jitter,bench}"
 OUT="tmp/close_${TAG}"
 mkdir -p "$OUT"
 FAIL=0
@@ -296,19 +295,6 @@ if has_step bench; then
   if [[ -s "$OUT/bench2.full.json" ]]; then
     cp "$OUT/bench2.full.json" "BENCH_CLOSE_${TAG}.json"
     SUMMARY+=("bench close record: BENCH_CLOSE_${TAG}.json (warm run)")
-  fi
-fi
-
-if has_step plans; then
-  note "PlanAudit regen…"
-  tools/run_main.sh graft.PlanAudit /root/testdata/sf0.01 PLANS.md \
-    >"$OUT/plans.log" 2>&1
-  if git diff --quiet -- PLANS.md; then
-    SUMMARY+=("plans: PLANS.md byte-identical (no plan drift)")
-  else
-    n=$(git diff --numstat -- PLANS.md | awk '{print $1 "+" $2}')
-    SUMMARY+=("plans: PLANS.md CHANGED ($n lines) — review git diff PLANS.md before committing")
-    # drift is a review item, not automatically a failure
   fi
 fi
 
