@@ -1,7 +1,10 @@
 package graft
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.debug.codegenStringSeq
+import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.mutable
 
 /** Query inspection: `graft.Inspect <sfDir> [name…]` (every query when
@@ -11,7 +14,10 @@ import scala.collection.mutable
   * prune projections, windows and join sides — and prints the Spark
   * UI's stage table for the last warm run: tasks, wall/run/CPU/GC ms,
   * max/median task time, input and shuffle volumes, then a `serial:`
-  * line naming the stages one task dominates. Unknown names exit 2
+  * line naming the stages one task dominates, then a `codegen:` line
+  * with each whole-stage-codegen stage that run executed: its source
+  * length and its largest method's bytecode size, with `HUGE` on any
+  * method HotSpot will not JIT-compile. Unknown names exit 2
   * before any job runs. Diagnostic only — never part of the bench or
   * verify surfaces. */
 object Inspect {
@@ -21,6 +27,11 @@ object Inspect {
     * per-row work runs in a single task. */
   private val SerialShare = 0.9
   private val SerialWallMs = 100L
+
+  /** HotSpot's default `HugeMethodLimit`: a method with more bytecode
+    * bytes than this is never JIT-compiled, so it always runs
+    * interpreted. */
+  val HugeMethodBytes = 8000
 
   private case class StageRow(id: Int, name: String, var tasks: Int = 0,
     var runMs: Long = 0, var maxMs: Long = 0,
@@ -88,10 +99,13 @@ object Inspect {
     println(build().queryExecution.explainString(FormattedMode))
     val cold = run()
     val listener = new StageListener
+    val executed = new ExecutedPlan
     val warm = Seq(run(), run(), {
       spark.sparkContext.addSparkListener(listener)
+      spark.listenerManager.register(executed)
       try run() finally {
         listener.settle(); spark.sparkContext.removeSparkListener(listener)
+        executed.settle(); spark.listenerManager.unregister(executed)
       }
     })
     println(f"  noop sink: cold=$cold%.2f s  warm=${warm.map(w => f"$w%.2f").mkString(" ")} s  min=${warm.min}%.2f s")
@@ -106,5 +120,26 @@ object Inspect {
     println("  serial: " + (if (serial.isEmpty) "none" else serial.map(r =>
       s"stage ${r.id} (${r.maxMs} of ${r.runMs} ms in 1 of ${r.tasks} tasks)")
       .mkString(", ")))
+    val stages = executed.plan.toSeq.flatMap(codegenStringSeq)
+    println("  codegen: " + (if (stages.isEmpty) "none" else stages.map {
+      case (subtree, src, stats) =>
+        val id = """^\*\((\d+)\)""".r.findFirstMatchIn(subtree).fold("?")(_.group(1))
+        val huge = if (stats.maxMethodCodeSize > HugeMethodBytes) " HUGE" else ""
+        s"*($id) ${src.length} chars, max method ${stats.maxMethodCodeSize} B$huge"
+    }.mkString("; ")))
+  }
+
+  /** The physical plan of the last `noop` write (a v2 write command)
+    * that ran while registered; a job the build ran is not one. */
+  private class ExecutedPlan extends QueryExecutionListener {
+    @volatile var plan: Option[SparkPlan] = None
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      if (qe.analyzed.isInstanceOf[V2WriteCommand]) plan = Some(qe.executedPlan)
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    /** Query-end events arrive on the listener bus; wait up to 5 s. */
+    def settle(): Unit = {
+      val deadline = System.nanoTime() + 5000000000L
+      while (plan.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    }
   }
 }

@@ -9,8 +9,10 @@ import org.apache.spark.sql.functions._
   * can push adjacent filters/pruning through them (the reference's
   * Python UDFs fenced the optimizer; SURVEY.md §4).
   *
-  * Works under Spark 4 ANSI mode: parse-failure→default is expressed
-  * with regex-gated casts rather than relying on lenient-cast nulls.
+  * Works under Spark 4 ANSI mode: no operator here relies on a
+  * lenient cast's null. U2 is one codegen'd expression whose parse
+  * failure is 0 by construction; the others avoid throwing casts
+  * (`try_to_date`).
   */
 object Cleanse {
 
@@ -30,33 +32,19 @@ object Cleanse {
   def parseTweetDate(c: Column): Column =
     call_function("try_to_date", tsPreClean(c), lit("MMM dd yyyy"))
 
-  /** Numeric-literal shape accepted by Python float() for the
-    * purposes of U2 (sign, decimal, exponent; surrounding blanks). */
-  private val NumRe = "^\\s*[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?\\s*$"
-
-  private def numOrNull(c: Column): Column =
-    when(c.rlike(NumRe), c.cast("double"))
-
   /** U2 `transformNumber` (ref demo.py:38-47): social-count strings —
     * "1.2K"→1200, "3M"→3000000, plain numerals→int, anything
-    * unparseable→0. */
-  def parseKmNumber(c: Column): Column = {
-    val t = trim(c)
-    val kNum = numOrNull(regexp_replace(t, "[Kk]$", ""))
-    val mNum = numOrNull(regexp_replace(t, "[Mm]$", ""))
-    val raw =
-      when(t.rlike("[Kk]$"), kNum * 1000)
-        .when(t.rlike("[Mm]$"), mNum * 1000000)
-        .otherwise(numOrNull(t))
-    // clamp before the cast: NumRe accepts exponents, and an ANSI
-    // int cast of e.g. "1e300" or "3000M" would otherwise throw
-    // CAST_OVERFLOW instead of degrading gracefully. greatest/least
-    // skip nulls, so the unparseable→null case must stay null here
-    // for the coalesce→0 to apply.
-    val clamped = when(raw.isNotNull,
-      least(greatest(raw, lit(Int.MinValue.toDouble)), lit(Int.MaxValue.toDouble)))
-    coalesce(clamped.cast("long"), lit(0L)).cast("int")
-  }
+    * unparseable or null→0. One codegen'd expression
+    * ([[graft.functions.KmNumber]]): it trims once and runs each regex
+    * at most once per row.
+    *
+    * Where U2 knowingly differs from Python `float()`: only ASCII
+    * blanks may surround a number and only ASCII digits parse, so an
+    * NBSP- or `\u2028`-padded number, `"1_000"` and non-ASCII digits
+    * all give 0 (Python strips all Unicode whitespace and accepts `_`
+    * separators and any Unicode decimal digit). The DuckDB oracle of
+    * q20 feeds it ASCII only. */
+  def parseKmNumber(c: Column): Column = graft.functions.KmNumber(c)
 
   /** U3 `logNormal` (ref demo.py:85-87): log2 bucketing of engagement
     * counts, `int(round(log2(x+1)))+1`. Python round is banker's

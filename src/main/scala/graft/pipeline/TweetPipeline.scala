@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
 
 import graft.ops.{Aggregates, Cleanse, Pairs}
@@ -19,6 +20,13 @@ import graft.text.{EntityRuler, Sentiment}
   *  - sampling is seeded (reproducible);
   *  - pivot month values are supplied explicitly (single job, no
   *    distinct-values pre-pass) when `months` is given.
+  *
+  * Plan size: building a Dataset re-analyzes the whole plan under it,
+  * and a stage's generated source grows with its expression trees.
+  * So enrich is a few `select` + `filter` steps rather than one step
+  * per column, U2 is one expression, and each output aggregates its
+  * own weight inside the pivot (one aggregate, not a weighted sum
+  * under a `max` level).
   *
   * Scale: per-row ops are narrow; each output's shuffle key is its
   * grouping key; pivot emits one row per (topic[, topic2], category)
@@ -50,71 +58,72 @@ object TweetPipeline {
     * identical in every column the pipeline reads and either
     * engine's tie-break yields the same downstream result — a
     * '|'-joined concat_ws would let a Text containing '|' alias
-    * with the adjacent fields (and silently skip nulls). */
+    * with the adjacent fields (and silently skip nulls).
+    *
+    * After the sample, four projections: the date and the count-column
+    * fills; Year/Month, the three log buckets and the keyword; the
+    * category and the NER phrases; CheckEmpty and Sentiment. Each is
+    * followed by one filter that folds the reference's filters at
+    * that point. Output columns: the input's, then TweetDate, Year,
+    * Month, Comments_log, Likes_log, Retweets_log, Keyword,
+    * Category2, All_phrases, CheckEmpty, Sentiment. */
   def enrich(raw: DataFrame, matcher: EntityRuler.Matcher,
              seed: Long = 42L, sampleN: Int = 500,
              hashSample: Boolean = false): DataFrame = {
-    val ner = EntityRuler.nerColumn(matcher) _
     def blk(c: String) = coalesce(md5(col(c)), lit("-"))
     val sampleKey =
       if (hashSample) md5(concat(blk("Timestamp"), blk("Text"),
         blk("Page_URL"), blk("Comments"), blk("Likes"), blk("Retweets")))
       else rand(seed)
+    // ref demo.py:77: na.fill("0") of the count columns, string-typed only
+    val counts = Set("Comments", "Likes", "Retweets")
+    val filled = raw.schema.fields.toSeq.map { f =>
+      if (!counts(f.name) || !f.dataType.isInstanceOf[StringType]) col(f.name)
+      else coalesce(col(f.name), lit("0")).as(f.name)
+    }
+    def logOf(c: String) = Cleanse.logBucket(Cleanse.parseKmNumber(col(c))).as(s"${c}_log")
+    // NER and the keyword regex are one-element explodes: a Generate,
+    // whose output no filter can be pushed beneath and no consumer can
+    // inline, so each runs once per row. A projected alias would be
+    // copied into every filter pushed below it (NER's null and empty
+    // filters made three copies).
     raw
-      .filter(col("Timestamp").isNotNull)                       // ref demo.py:58
+      .filter(col("Timestamp").isNotNull)                        // ref demo.py:58
       .orderBy(sampleKey)                                        // ref demo.py:55 (seeded)
       .limit(sampleN)                                            // ref demo.py:59
-      .withColumn("TweetDate", Cleanse.parseTweetDate(col("Timestamp")))
-      .filter(col("TweetDate").isNotNull)                        // ref demo.py:70
-      .withColumn("Year", year(col("TweetDate")))
-      .withColumn("Month", month(col("TweetDate")))
-      .na.fill("0", Seq("Comments", "Likes", "Retweets"))        // ref demo.py:77
-      .withColumn("Comments_log", Cleanse.logBucket(Cleanse.parseKmNumber(col("Comments"))))
-      .withColumn("Likes_log", Cleanse.logBucket(Cleanse.parseKmNumber(col("Likes"))))
-      .withColumn("Retweets_log", Cleanse.logBucket(Cleanse.parseKmNumber(col("Retweets"))))
-      .filter(col("Page_URL").isNotNull)                         // ref demo.py:108
-      .transform(once("Keyword", Cleanse.keywordText(col("Page_URL"))))
+      .select(filled :+ Cleanse.parseTweetDate(col("Timestamp")).as("TweetDate"): _*)
+      .filter(col("TweetDate").isNotNull &&                      // ref demo.py:70
+        col("Page_URL").isNotNull)                               // ref demo.py:108
+      .select(col("*"), year(col("TweetDate")).as("Year"), month(col("TweetDate")).as("Month"),
+        logOf("Comments"), logOf("Likes"), logOf("Retweets"),
+        explode(array(Cleanse.keywordText(col("Page_URL")))).as("Keyword"))
       .filter(col("Keyword") =!= "")                             // ref demo.py:110
-      .withColumn("Category2", Cleanse.categoryFor(col("Keyword")))
-      .transform(once("All_phrases", ner(col("Text"))))
-      .filter(col("All_phrases").isNotNull)                      // ref demo.py:143
-      .withColumn("CheckEmpty", Cleanse.checkEmpty(col("All_phrases")))
-      .filter(col("CheckEmpty") =!= 1)                           // ref demo.py:157 (intended)
-      .withColumn("Sentiment", Sentiment.sentimentColumnNative(col("Text")).cast("float"))
+      .select(col("*"), Cleanse.categoryFor(col("Keyword")).as("Category2"),
+        explode(array(EntityRuler.nerColumn(matcher)(col("Text")))).as("All_phrases"))
+      .filter(col("All_phrases").isNotNull &&                    // ref demo.py:143
+        Cleanse.checkEmpty(col("All_phrases")) =!= 1)            // ref demo.py:157 (intended)
+      .select(col("*"), Cleanse.checkEmpty(col("All_phrases")).as("CheckEmpty"),
+        Sentiment.sentimentColumnNative(col("Text")).cast("float").as("Sentiment"))
   }
-
-  /** Appends `c` as column `name`, evaluated once per row. A plain
-    * `withColumn` is a projection alias, which the optimizer copies
-    * into every filter it pushes below that projection, evaluating
-    * the expression once per copy (NER's null and empty filters made
-    * three). A one-element explode is a Generate, whose output no
-    * filter can be pushed beneath and no consumer can inline; it
-    * yields exactly one row per input row, null included. */
-  private def once(name: String, c: Column)(df: DataFrame): DataFrame =
-    df.select(col("*"), explode(array(c)).as(name))
-
-  private val keys = Seq("Year", "Month", "Category2")
 
   private def monthTag(prefix: String) =
     concat(lit(prefix), col("Year"), lit("-"), col("Month"))
 
+  /** One output: `weighted` aggregated per (groupCols, month) and
+    * pivoted on the month tag in one aggregate. The tag is a
+    * one-to-one function of (Year, Month), so grouping by it is
+    * grouping by the month. */
   private def pivotOut(df: DataFrame, prefix: String, groupCols: Seq[String],
-                       valueCol: String, months: Seq[String]): DataFrame = {
-    val tagged = df.withColumn("MonthTag", monthTag(prefix))
+                       weighted: Column, months: Seq[String]): DataFrame = {
     // lexicographic column order, matching the reference's golden
     // headers (Spark sorts discovered pivot values; we sort pinned
     // ones the same way)
-    val vals = (
-      if (months.nonEmpty) months.map(prefix + _)
-      else tagged.select("MonthTag").distinct()
-        .collect().map(_.getString(0)).toSeq
-      ).sorted
-    val piv = Aggregates.monthPivot(tagged, groupCols, "MonthTag", vals, valueCol)
-      .withColumn("Category1", lit("Beverage"))                  // ref demo.py:232
+    val piv = Aggregates.pivotFilled(df, groupCols, monthTag(prefix),
+      months.map(prefix + _).sorted, weighted)
     // defensive empty-sentinel guards on every topic column
-    // (ref demo.py:233, 323, 428-429, 490-491)
-    groupCols.filter(_.startsWith("Topic"))
-      .foldLeft(piv)((d, c) => d.filter(col(c) =!= "empty"))
+    // (ref demo.py:232-233, 323, 428-429, 490-491)
+    val notEmpty = groupCols.filter(_.startsWith("Topic")).map(c => col(c) =!= "empty")
+    piv.select(col("*"), lit("Beverage").as("Category1")).filter(notEmpty.reduce(_ && _))
   }
 
   /** Run the full pipeline. `months` (as "YYYY-M" strings) pins the
@@ -122,11 +131,11 @@ object TweetPipeline {
     * one lazily-planned Catalyst job per output with no driver-side
     * pre-pass (TweetPipelineSpec asserts construction submits zero
     * jobs), which is what q70/q71/q7F/q80 run. Leaving `months` empty
-    * is the convenience path for exploratory use: pivot values are
-    * discovered from the data via a driver collect of the distinct
-    * month tags (bounded by #months; the same two-job shape as
-    * Spark's own un-argumented pivot). `persist` caches the enriched
-    * frame across the 4-way fan-out (release via [[Outputs.release]]);
+    * is the convenience path for exploratory use: Spark's own
+    * un-argumented pivot discovers the month tags from the data (a
+    * distinct job per output, bounded by #months; sorted as above).
+    * `persist` caches the enriched frame across the 4-way fan-out
+    * (release via [[Outputs.release]]);
     * pass false when only one output will be consumed — the cache
     * would be pure overhead. */
   def run(raw: DataFrame, matcher: EntityRuler.Matcher, seed: Long = 42L,
@@ -145,23 +154,16 @@ object TweetPipeline {
         col("All_phrases"), col("Retweets_log"), col("Likes_log"), col("Sentiment")),
       "All_phrases", "Topic", "Topic2")
 
-    val freq1d = pivotOut(
-      Aggregates.weightedFreq1D(exploded, keys, "Topic", "Retweets_log"),
-      "Frequency_", Seq("Topic", "Category2"), "frequency", months)
+    val freq = Aggregates.freq1DWeight(col("Retweets_log"))
+    // ref FloatType truncation, inside the aggregate so the pivot keeps
+    // its two-step (PivotFirst) plan
+    val sent = Aggregates.sentimentWeight(col("Sentiment"), col("Likes_log")).cast("float")
 
-    val sent1d = pivotOut(
-      Aggregates.weightedSentiment1D(exploded, keys, "Topic", "Sentiment", "Likes_log")
-        .withColumn("sentiment", col("sentiment").cast("float")), // ref FloatType truncation
-      "Sentiment_", Seq("Topic", "Category2"), "sentiment", months)
-
-    val sent2d = pivotOut(
-      Aggregates.weightedSentiment2D(paired, keys, "Topic", "Topic2", "Sentiment", "Likes_log")
-        .withColumn("sentiment", col("sentiment").cast("float")),
-      "Sentiment_", Seq("Category2", "Topic", "Topic2"), "sentiment", months)
-
-    val freq2d = pivotOut(
-      Aggregates.weightedFreq2D(paired, keys, "Topic", "Topic2", "Retweets_log"),
-      "Frequency_", Seq("Topic", "Topic2", "Category2"), "frequency", months)
+    val freq1d = pivotOut(exploded, "Frequency_", Seq("Topic", "Category2"), freq, months)
+    val sent1d = pivotOut(exploded, "Sentiment_", Seq("Topic", "Category2"), sent, months)
+    val sent2d = pivotOut(paired, "Sentiment_", Seq("Category2", "Topic", "Topic2"), sent, months)
+    val freq2d = pivotOut(paired, "Frequency_", Seq("Topic", "Topic2", "Category2"),
+      Aggregates.freq2DWeight(col("Retweets_log")), months)
 
     Outputs(freq1d, sent1d, sent2d, freq2d,
       release = () => if (persist) { enriched.unpersist(); () })

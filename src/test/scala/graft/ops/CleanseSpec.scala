@@ -35,6 +35,16 @@ class CleanseSpec extends SparkSpec {
     assert(out.toSeq === cases.map(_._2))
   }
 
+  test("U2 parseKmNumber: a number before U+2028 or U+0085 is 0 under ANSI, not an error") {
+    // Java's `$` matches before either terminator, so the numeral
+    // regex accepts these, but the string-to-double cast does not trim
+    // them: the Column form this replaced threw CAST_INVALID_INPUT
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    val out = Seq("5\u2028", "5\u0085", "5K\u2028").toDF("x").repartition(2)
+      .select(Cleanse.parseKmNumber(col("x"))).as[Int].collect()
+    assert(out.toSeq === Seq(0, 0, 0))
+  }
+
   test("U3 logBucket: 0→1, 1000→11, banker's rounding via bround") {
     val cases = Seq(0 -> 1, 1 -> 2, 1000 -> 11, 2 -> 3, 3 -> 3, 7 -> 4)
     val out = cases.map(_._1).toDF("x")

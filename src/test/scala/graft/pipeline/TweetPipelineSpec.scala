@@ -147,6 +147,29 @@ class TweetPipelineSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  // repartitioned: over a bare local relation the optimizer would
+  // evaluate the whole enrichment while planning
+  private def pinnedOutputs(persist: Boolean) = TweetPipeline.run(
+    fixture.toDF("Timestamp", "Text", "Page_URL", "Comments", "Likes", "Retweets")
+      .repartition(2),
+    matcher, seed = 7L, sampleN = 5, months = Seq("2019-1", "2019-2", "2020-3"),
+    persist = persist)
+
+  private def all(o: TweetPipeline.Outputs) = Seq(o.freq1d, o.sent1d, o.sent2d, o.freq2d)
+
+  /** The physical plans of the cached enrich frames under `plans`. */
+  private def cachedPlans(plans: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+    plans.flatMap(_.collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        s.relation.cachedPlan
+    })
+
+  private def withoutAqe[A](body: => A): A = {
+    val adaptiveWas = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try body finally spark.conf.set("spark.sql.adaptive.enabled", adaptiveWas)
+  }
+
   test("NER and the keyword regex chain run once per sampled row, on both paths") {
     // a filter on a projected column used to be pushed below the
     // projection with the expression copied into it: 3 NerExtract and
@@ -155,32 +178,41 @@ class TweetPipelineSpec extends SparkSpec {
     // cache, whose own plan is counted separately.
     import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpExtract}
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     def nodes(p: SparkPlan)(pick: PartialFunction[Expression, Unit]): Int =
       p.collect { case n => n.expressions.map(_.collect(pick).size).sum }.sum
     def ner(p: SparkPlan) = nodes(p) { case _: graft.functions.NerExtract => }
     def regex(p: SparkPlan) = nodes(p) { case _: RegExpExtract => }
-    // repartitioned: over a bare local relation the optimizer would
-    // evaluate the whole enrichment while planning
-    val raw = fixture.toDF("Timestamp", "Text", "Page_URL", "Comments",
-      "Likes", "Retweets").repartition(2)
-    def outputs(persist: Boolean) = TweetPipeline.run(raw, matcher, seed = 7L,
-      sampleN = 5, months = Seq("2019-1", "2019-2", "2020-3"), persist = persist)
-    def all(o: TweetPipeline.Outputs) = Seq(o.freq1d, o.sent1d, o.sent2d, o.freq2d)
-    val adaptiveWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      all(outputs(persist = false)).map(_.queryExecution.executedPlan).foreach { p =>
+    withoutAqe {
+      all(pinnedOutputs(persist = false)).map(_.queryExecution.executedPlan).foreach { p =>
         assert(ner(p) === 1 && regex(p) === 1, p.toString)
       }
-      val cached = outputs(persist = true)
+      val cached = pinnedOutputs(persist = true)
       try all(cached).map(_.queryExecution.executedPlan).foreach { p =>
         assert(ner(p) === 0 && regex(p) === 0, p.toString)
-        val child = p.collectFirst { case s: InMemoryTableScanExec =>
-          s.relation.cachedPlan }
+        val child = cachedPlans(Seq(p)).headOption
         assert(child.exists(c => ner(c) === 1 && regex(c) === 1), child.toString)
       } finally cached.release()
-    } finally spark.conf.set("spark.sql.adaptive.enabled", adaptiveWas)
+    }
+  }
+
+  test("no generated method of the enrich cache or an output is too large to JIT-compile") {
+    // HotSpot never compiles a method over 8,000 bytecode bytes; U2 as
+    // a Column of regex-gated casts per count column made the enrich
+    // stage's main method 13,800 bytes
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    withoutAqe {
+      val o = pinnedOutputs(persist = true)
+      try {
+        val plans = all(o).map(_.queryExecution.executedPlan)
+        val cached = cachedPlans(plans)
+        assert(cached.size === 4)
+        val stages = (plans ++ cached).flatMap(codegenStringSeq)
+        assert(stages.size > 4)
+        stages.foreach { case (subtree, _, stats) =>
+          assert(stats.maxMethodCodeSize <= graft.Inspect.HugeMethodBytes, subtree)
+        }
+      } finally o.release()
+    }
   }
 
   test("hashSample: selects the sampleN-smallest md5 rows, layout-invariant") {
