@@ -100,7 +100,7 @@ object GraftFunctions {
       new ExpressionInfo(classOf[NerExtract].getName, "ner_demo"),
       (args: Seq[Expression]) => {
         arity("ner_demo", args, 1)
-        NerExtract(args(0), demoMatcher)
+        GraftShims.eagerExpression(EntityRuler.nerColumn(demoMatcher)(GraftShims.column(args(0))))
       }),
     // generator: composes like explode (SELECT or LATERAL)
     (FunctionIdentifier("chunk_text"),

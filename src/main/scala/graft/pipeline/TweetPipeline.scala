@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.{NerExtract, SentimentScore}
 import graft.ops.{Aggregates, Cleanse, Pairs}
-import graft.text.{EntityRuler, Sentiment}
+import graft.text.{EntityRuler, Tokenizer}
 
 /** The reference's full pipeline (ref demo.py:53-492), composed from
   * the engine's native operators: cleanse → enrich (NER + sentiment)
@@ -60,13 +61,13 @@ object TweetPipeline {
     * '|'-joined concat_ws would let a Text containing '|' alias
     * with the adjacent fields (and silently skip nulls).
     *
-    * After the sample, four projections: the date and the count-column
+    * After the sample, five projections: the date and the count-column
     * fills; Year/Month, the three log buckets and the keyword; the
-    * category and the NER phrases; CheckEmpty and Sentiment. Each is
-    * followed by one filter that folds the reference's filters at
-    * that point. Output columns: the input's, then TweetDate, Year,
-    * Month, Comments_log, Likes_log, Retweets_log, Keyword,
-    * Category2, All_phrases, CheckEmpty, Sentiment. */
+    * category and the Text's `Tokens`, which NER and sentiment read and
+    * the output drops; the NER phrases; CheckEmpty and Sentiment.
+    * Filters between them fold the reference's. Output columns: the
+    * input's, then TweetDate, Year, Month, Comments_log, Likes_log,
+    * Retweets_log, Keyword, Category2, All_phrases, CheckEmpty, Sentiment. */
   def enrich(raw: DataFrame, matcher: EntityRuler.Matcher,
              seed: Long = 42L, sampleN: Int = 500,
              hashSample: Boolean = false): DataFrame = {
@@ -82,11 +83,11 @@ object TweetPipeline {
       else coalesce(col(f.name), lit("0")).as(f.name)
     }
     def logOf(c: String) = Cleanse.logBucket(Cleanse.parseKmNumber(col(c))).as(s"${c}_log")
-    // NER and the keyword regex are one-element explodes: a Generate,
-    // whose output no filter can be pushed beneath and no consumer can
-    // inline, so each runs once per row. A projected alias would be
-    // copied into every filter pushed below it (NER's null and empty
-    // filters made three copies).
+    // The keyword regex, the tokens and NER are one-element explodes: a
+    // Generate, whose output no filter can be pushed beneath and no
+    // consumer can inline, so each runs once per row. A projected alias
+    // would be copied into every filter pushed below it (NER's null and
+    // empty filters made three copies).
     raw
       .filter(col("Timestamp").isNotNull)                        // ref demo.py:58
       .orderBy(sampleKey)                                        // ref demo.py:55 (seeded)
@@ -99,11 +100,13 @@ object TweetPipeline {
         explode(array(Cleanse.keywordText(col("Page_URL")))).as("Keyword"))
       .filter(col("Keyword") =!= "")                             // ref demo.py:110
       .select(col("*"), Cleanse.categoryFor(col("Keyword")).as("Category2"),
-        explode(array(EntityRuler.nerColumn(matcher)(col("Text")))).as("All_phrases"))
+        explode(array(Tokenizer.tokenizeColumn(col("Text")))).as("Tokens"))
+      .select(col("*"), explode(array(NerExtract(col("Tokens"), matcher))).as("All_phrases"))
       .filter(col("All_phrases").isNotNull &&                    // ref demo.py:143
         Cleanse.checkEmpty(col("All_phrases")) =!= 1)            // ref demo.py:157 (intended)
       .select(col("*"), Cleanse.checkEmpty(col("All_phrases")).as("CheckEmpty"),
-        Sentiment.sentimentColumnNative(col("Text")).cast("float").as("Sentiment"))
+        SentimentScore(col("Tokens")).cast("float").as("Sentiment"))
+      .drop("Tokens")
   }
 
   private def monthTag(prefix: String) =

@@ -712,10 +712,10 @@ object EvalQueries {
           .orderBy(col("s").desc, col("vec_id").asc)))
         .filter(col("rn") <= 10)
         .select(col("q"), col("vec_id").as(tag))
-      val full = topk(graft.similarity.Similarity.dot(col("qv"), col("v")), "d_full")
-      val pre = topk(graft.similarity.Similarity.dot(col("qv16"), col("v16")), "d_pre")
-      full.join(pre, full("q") === pre("q") && col("d_full") === col("d_pre"))
-        .groupBy(full("q").as("q")).agg(count(lit(1)).as("n_overlap"))
+      val full = topk(graft.similarity.Similarity.dot(col("qv"), col("v")), "d_full").as("f")
+      val pre = topk(graft.similarity.Similarity.dot(col("qv16"), col("v16")), "d_pre").as("p")
+      full.join(pre, col("f.q") === col("p.q") && col("d_full") === col("d_pre"))
+        .groupBy(col("f.q").as("q")).agg(count(lit(1)).as("n_overlap"))
         .agg(count(lit(1)).as("n_probes"), sum("n_overlap").as("s_overlap"))
         .select(col("n_probes"), col("s_overlap"),
           expr("CAST(s_overlap AS DOUBLE) / n_probes / 10").as("recall_at_10"))

@@ -724,7 +724,7 @@ object TextQueries extends org.apache.spark.internal.Logging {
     * parameterized — the pipeline oracles walk a SAMPLED subset. */
   private[queries] def nerWalkSqlFrom(src: String): String = {
     import EntityRuler.{LowerTok, ExactTok, TokPat}
-    // graft.text.Tokenizer.Tok with the quote doubled for a SQL literal
+    // graft.text.Tokenizer.Pattern with the quote doubled for a SQL literal
     val tokRe = "@[A-Za-z0-9_]+|[A-Za-z0-9_]+(?:''[A-Za-z]+)?|[^A-Za-z0-9_\\s]"
     def cond(t: TokPat, off: Int): String = t match {
       case LowerTok(x) =>

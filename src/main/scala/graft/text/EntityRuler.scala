@@ -119,15 +119,12 @@ object EntityRuler {
       }
       if (out.isEmpty) Array("empty") else out.toArray
     }
-
-    def extract(text: String): Array[String] =
-      matchTokens(Tokenizer.tokenize(text))
   }
 
-  /** Column form: tokenize + match as one scalar expression
-    * (graft.functions.NerExtract). A null text gives a null array. */
+  /** Column form: graft.functions.NerExtract over the text's
+    * [[Tokenizer.tokenizeColumn]] tokens. A null text gives a null array. */
   def nerColumn(matcher: Matcher)(text: Column): Column =
-    graft.functions.NerExtract(text, matcher)
+    graft.functions.NerExtract(Tokenizer.tokenizeColumn(text), matcher)
 
   /** Load spaCy EntityRuler patterns.jsonl (the reference's model
     * format) into [[Pattern]]s. Token attrs handled: LOWER, Text,

@@ -400,9 +400,8 @@ object Sentiment {
     if (n == 0) 0.0 else sum.toDouble / n / 1000000.0
   }
 
-  /** The pipeline's Column scorer: [[Tokenizer]]'s regex tokens (so
-    * "great!" still scores) through the one scoring expression,
-    * graft.functions.SentimentScore. A null text scores 0.0. */
+  /** graft.functions.SentimentScore over [[Tokenizer.tokenizeColumn]]'s
+    * tokens (so "great!" still scores). A null text scores 0.0. */
   def sentimentColumnNative(text: Column): Column =
     graft.functions.SentimentScore(Tokenizer.tokenizeColumn(text))
 }

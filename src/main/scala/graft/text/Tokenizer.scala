@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions.{lit, regexp_extract_all}
   *
   * Exact spaCy-tokenizer parity is a non-goal (the reference's golden
   * outputs are irreproducible anyway, SURVEY.md §5); the matcher
-  * contract is what's tested.
+  * contract is what's tested. Engine code runs only [[tokenizeColumn]],
+  * whose tokens NER and sentiment share; [[tokenize]] is the specs'
+  * reference.
   */
 object Tokenizer {
 
@@ -21,11 +23,9 @@ object Tokenizer {
   val Pattern: String =
     "@[A-Za-z0-9_]+|[A-Za-z0-9_]+(?:'[A-Za-z]+)?|[^A-Za-z0-9_\\s]"
 
-  private val Tok = Pattern.r
-
   def tokenize(text: String): Array[String] =
     if (text == null) Array.empty
-    else Tok.findAllIn(text).toArray
+    else Pattern.r.findAllIn(text).toArray
 
   /** Column twin of [[tokenize]]; a null text gives a null array. */
   def tokenizeColumn(text: Column): Column =

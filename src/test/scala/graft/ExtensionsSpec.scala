@@ -12,17 +12,23 @@ class ExtensionsSpec extends SparkSpec {
   test("late-bound functions resolve from SQL and match the Column API") {
     GraftFunctions.register(spark)
     import spark.implicits._
-    Seq((Seq(1.0f, 2.0f), Seq("a", "b", "c", "d"), "hash join on spark"))
-      .toDF("v", "toks", "text")
+    Seq((1, Seq(1.0f, 2.0f), Seq("a", "b", "c", "d"), "hash join on spark"),
+        (2, Seq(1.0f, 2.0f), Seq("a", "b", "c", "d"), null),
+        (3, Seq(1.0f, 2.0f), Seq("a", "b", "c", "d"), ""))
+      .toDF("id", "v", "toks", "text")
       .createOrReplaceTempView("ext_t")
-    val row = spark.sql(
+    val rows = spark.sql(
       """SELECT array_dot(v, v) AS d,
                 word_shingles(toks, 2) AS sh,
                 ner_demo(text) AS topics
-         FROM ext_t""").head()
+         FROM ext_t ORDER BY id""").collect()
+    val row = rows(0)
     assert(row.getDouble(0) == 5.0)
     assert(row.getSeq[String](1) == Seq("a b", "b c", "c d"))
     assert(row.getSeq[String](2) == Seq("Hash Join", "Spark"))
+    // a null text gives null topics; an empty one the sentinel
+    assert(rows(1).isNullAt(2))
+    assert(rows(2).getSeq[String](2) == Seq("empty"))
   }
 
   test("word_shingles rejects a non-literal width") {

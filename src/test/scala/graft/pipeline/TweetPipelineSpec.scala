@@ -75,7 +75,7 @@ class TweetPipelineSpec extends SparkSpec {
     val expected = fixture
       .filter(t => t._1 != null && t._1.endsWith("2019") && t._1.startsWith("Jan"))
       .filter(t => t._3 == url("coke"))
-      .filter(t => matcher.extract(t._2).contains("Coke"))
+      .filter(t => matcher.matchTokens(graft.text.Tokenizer.tokenize(t._2)).contains("Coke"))
       .map(t => rl(t._6) + 1).sum
     val cell = out.freq1d
       .filter($"Topic" === "Coke" && $"Category2" === "ginger ale")
@@ -173,24 +173,28 @@ class TweetPipelineSpec extends SparkSpec {
   test("NER and the keyword regex chain run once per sampled row, on both paths") {
     // a filter on a projected column used to be pushed below the
     // projection with the expression copied into it: 3 NerExtract and
-    // 2 regexp_extract nodes per enriched row. The count is taken over
-    // the physical plan that runs; with persist the outputs scan the
-    // cache, whose own plan is counted separately.
-    import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpExtract}
+    // 2 regexp_extract nodes per enriched row. NER and sentiment share
+    // one tokenizer (regexp_extract_all) node; sentiment tokenizing the
+    // Text again would make two. The count is taken over the physical
+    // plan that runs; with persist the outputs scan the cache, whose
+    // own plan is counted separately.
+    import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpExtract, RegExpExtractAll}
     import org.apache.spark.sql.execution.SparkPlan
     def nodes(p: SparkPlan)(pick: PartialFunction[Expression, Unit]): Int =
       p.collect { case n => n.expressions.map(_.collect(pick).size).sum }.sum
     def ner(p: SparkPlan) = nodes(p) { case _: graft.functions.NerExtract => }
     def regex(p: SparkPlan) = nodes(p) { case _: RegExpExtract => }
+    def tokens(p: SparkPlan) = nodes(p) { case _: RegExpExtractAll => }
     withoutAqe {
       all(pinnedOutputs(persist = false)).map(_.queryExecution.executedPlan).foreach { p =>
-        assert(ner(p) === 1 && regex(p) === 1, p.toString)
+        assert(ner(p) === 1 && regex(p) === 1 && tokens(p) === 1, p.toString)
       }
       val cached = pinnedOutputs(persist = true)
       try all(cached).map(_.queryExecution.executedPlan).foreach { p =>
-        assert(ner(p) === 0 && regex(p) === 0, p.toString)
+        assert(ner(p) === 0 && regex(p) === 0 && tokens(p) === 0, p.toString)
         val child = cachedPlans(Seq(p)).headOption
-        assert(child.exists(c => ner(c) === 1 && regex(c) === 1), child.toString)
+        assert(child.exists(c => ner(c) === 1 && regex(c) === 1 && tokens(c) === 1),
+          child.toString)
       } finally cached.release()
     }
   }

@@ -73,7 +73,7 @@ class RulerMatcherSpec extends graft.SparkSpec {
   }
 
   test("structural: @mention and #hashtag emit surface") {
-    assert(m.extract("ask @WaltonCoke about #needcalgon now").toSeq ===
+    assert(m.matchTokens(Tokenizer.tokenize("ask @WaltonCoke about #needcalgon now")).toSeq ===
       Seq("@WaltonCoke", "#needcalgon"))
   }
 
@@ -121,11 +121,11 @@ class PatternsLoadSpec extends graft.SparkSpec {
     assert(pats.size > 25000)
     val m = new EntityRuler.Matcher(pats)
     // known patterns from the file: LOWER bigram with id, exact Brand
-    assert(m.extract("add olive oil and Carrefour salt").toSeq
+    assert(m.matchTokens(Tokenizer.tokenize("add olive oil and Carrefour salt")).toSeq
       .contains("Olive Oil"))
-    assert(m.extract("Carrefour").toSeq === Seq("Carrefour"))
+    assert(m.matchTokens(Tokenizer.tokenize("Carrefour")).toSeq === Seq("Carrefour"))
     // Brand patterns are case-sensitive (Text attr)
-    assert(m.extract("I love carrefour").toSeq === Seq("empty"))
+    assert(m.matchTokens(Tokenizer.tokenize("I love carrefour")).toSeq === Seq("empty"))
   }
 }
 

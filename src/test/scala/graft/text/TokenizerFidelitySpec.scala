@@ -1,6 +1,9 @@
 package graft.text
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.col
+
+import graft.queries.TextQueries
 
 /** Pinned tokenization corpus — 56 adversarial tweets covering the
   * edge classes the NER matcher (q30/q38) and the text-stats family
@@ -26,8 +29,14 @@ import org.scalatest.funsuite.AnyFunSuite
   *    shatter — language-ID and quality scoring count on that);
   *  - astral-plane emoji are ONE token per code point, never split
   *    into surrogate halves.
+  *
+  * The corpus runs through both forms: the Scala reference
+  * `Tokenizer.tokenize` and `Tokenizer.tokenizeColumn`, the one form
+  * engine code runs. NER over the Column tokens must equal the
+  * reference matcher walk over the reference tokens.
   */
-class TokenizerFidelitySpec extends AnyFunSuite {
+class TokenizerFidelitySpec extends graft.SparkSpec {
+  import spark.implicits._
 
   private val pinned: Seq[(String, Seq[String])] = Seq(
     ("Hello, world!",
@@ -153,6 +162,41 @@ class TokenizerFidelitySpec extends AnyFunSuite {
       else Some(s"input <$input>\n  expected: $expect\n  got     : $got")
     }
     assert(diffs.isEmpty, "tokenizer drift:\n" + diffs.mkString("\n"))
+  }
+
+  /** `texts` as a frame (`i`, `text`) through `f`, back as an `i`-indexed map. */
+  private def perText(texts: Seq[String])(f: Column => Column): Map[Int, Option[Seq[String]]] =
+    texts.zipWithIndex.toDF("text", "i").select(col("i"), f(col("text"))).collect()
+      .map(r => r.getInt(0) -> Option(r.getSeq[String](1))).toMap
+
+  test("the Column tokenizer gives the pinned tokens; a null text gives a null array") {
+    val got = perText(pinned.map(_._1))(Tokenizer.tokenizeColumn)
+    val diffs = pinned.zipWithIndex.flatMap { case ((input, expect), i) =>
+      val want = if (input == null) None else Some(expect)
+      if (got(i) == want) None
+      else Some(s"input <$input>\n  expected: $want\n  got     : ${got(i)}")
+    }
+    assert(diffs.isEmpty, "Column tokenizer drift:\n" + diffs.mkString("\n"))
+  }
+
+  test("nerColumn equals the matcher over the reference tokens; a null text gives null") {
+    import EntityRuler._
+    val mixed = new Matcher(Seq(
+      Pattern("Brand", Seq(ExactTok("Dr"), LowerTok("pepper")), Some("Dr Pepper"))))
+    // TextSpec's NER texts: matcher cases joined back into text
+    val nerTexts = Seq("ask @WaltonCoke about #needcalgon now", "sort merge x",
+      "sort x merge", "HASH Join", "spark", "Spark", "SPARK", "stream", "STREAM",
+      "Dr Pepper", "Dr PEPPER", "dr pepper", "sort sort", "nothing here",
+      "hash join on spark", "I love coke with lime")
+    val texts = pinned.map(_._1) ++ nerTexts
+    assert(texts.contains(null) && texts.contains(""))
+    for (m <- Seq(new Matcher(TextQueries.demoPatterns), mixed)) {
+      val got = perText(texts)(EntityRuler.nerColumn(m))
+      texts.zipWithIndex.foreach { case (t, i) =>
+        val want = Option(t).map(s => m.matchTokens(Tokenizer.tokenize(s)).toSeq)
+        assert(got(i) === want, s"text <$t>")
+      }
+    }
   }
 
   test("emoji tokens round-trip as full code points, not surrogate halves") {
