@@ -88,6 +88,12 @@ object GraftShims {
     }
   }
 
+  /** Test seam: block until every listener has been handed every event
+    * posted so far (the listener bus is private[spark]), so a spec can
+    * count jobs and executions without sleeping. */
+  def waitForListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Test seam: apply an extensions object's injected functions to a
     * registry (what session construction does internally) so specs
     * can assert the injection wiring without building a session. */

@@ -11,29 +11,8 @@ import graft.text.EntityRuler
   * golden-output schema shape and invariants, (b) a brute-force Scala
   * fold of the A2 weight formula. */
 class TweetPipelineSpec extends SparkSpec {
-  import EntityRuler._
+  import TweetPipelineSpec._
   import spark.implicits._
-
-  private val matcher = new Matcher(Seq(
-    Pattern("Brand", Seq(LowerTok("coke")), Some("Coke")),
-    Pattern("Brand", Seq(LowerTok("ginger"), LowerTok("ale")), Some("Ginger Ale")),
-    Pattern("Brand", Seq(LowerTok("tonic")), Some("Tonic")),
-    Pattern("Ingredient", Seq(LowerTok("lime")), Some("Lime"))))
-
-  private def url(kw: String) =
-    s"https://twitter.com/search?q=${kw.replace(" ", "%20")}%20lang%3Aen%20until%3A2019-03-01"
-
-  // (Timestamp, Text, Page_URL, Comments, Likes, Retweets)
-  private val fixture = Seq(
-    ("Jan 05, 2019", "I love coke with lime", url("coke"), "1", "10", "3"),
-    ("Jan 07, 2019", "coke is great really", url("coke"), "0", "1.2K", "7"),
-    ("Jan 09, 2019", "ginger ale and lime", url("ginger ale"), "2", "15", "0"),
-    ("Feb 02, 2019", "tonic tastes awful", url("tonic"), "0", "3", "1"),
-    ("Feb 11, 2019", "coke coke coke", url("coke"), "garbage", "5", "2K"),
-    ("Mar 07", "tonic with lime", url("tonic"), "1", "2", "4"), // short ts → 2020
-    ("Jan 20, 2019", "nothing to see here", url("coke"), "0", "0", "0"), // empty NER → dropped
-    (null, "coke", url("coke"), "0", "0", "0") // null ts → dropped
-  )
 
   private lazy val out = TweetPipeline.run(
     fixture.toDF("Timestamp", "Text", "Page_URL", "Comments", "Likes", "Retweets"),
@@ -263,4 +242,30 @@ class TweetPipelineSpec extends SparkSpec {
       matcher, seed = 7L, sampleN = 100, months = months)
     assert(out.freq1d.columns.toSeq === header)
   }
+}
+
+/** The deterministic fixture and matcher, shared with the sink specs. */
+object TweetPipelineSpec {
+  import EntityRuler._
+
+  val matcher = new Matcher(Seq(
+    Pattern("Brand", Seq(LowerTok("coke")), Some("Coke")),
+    Pattern("Brand", Seq(LowerTok("ginger"), LowerTok("ale")), Some("Ginger Ale")),
+    Pattern("Brand", Seq(LowerTok("tonic")), Some("Tonic")),
+    Pattern("Ingredient", Seq(LowerTok("lime")), Some("Lime"))))
+
+  def url(kw: String) =
+    s"https://twitter.com/search?q=${kw.replace(" ", "%20")}%20lang%3Aen%20until%3A2019-03-01"
+
+  // (Timestamp, Text, Page_URL, Comments, Likes, Retweets)
+  val fixture = Seq(
+    ("Jan 05, 2019", "I love coke with lime", url("coke"), "1", "10", "3"),
+    ("Jan 07, 2019", "coke is great really", url("coke"), "0", "1.2K", "7"),
+    ("Jan 09, 2019", "ginger ale and lime", url("ginger ale"), "2", "15", "0"),
+    ("Feb 02, 2019", "tonic tastes awful", url("tonic"), "0", "3", "1"),
+    ("Feb 11, 2019", "coke coke coke", url("coke"), "garbage", "5", "2K"),
+    ("Mar 07", "tonic with lime", url("tonic"), "1", "2", "4"), // short ts → 2020
+    ("Jan 20, 2019", "nothing to see here", url("coke"), "0", "0", "0"), // empty NER → dropped
+    (null, "coke", url("coke"), "0", "0", "0") // null ts → dropped
+  )
 }
