@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.debug.codegenStringSeq
@@ -39,20 +39,21 @@ object Inspect {
     var inputB: Long = 0, var srB: Long = 0, var swB: Long = 0,
     var wallMs: Long = 0, var cpuNs: Long = 0, var gcMs: Long = 0)
 
-  /** Per-stage task tallies of every job run while it is attached. */
+  /** Per-stage task tallies of every job run while it is attached;
+    * a stage's wall time is its own submission-to-completion span. */
   private class StageListener extends SparkListener {
     val stages = mutable.LinkedHashMap.empty[Int, StageRow]
-    private val starts = mutable.Map.empty[Int, Long]
     private def row(id: Int, name: String) =
       stages.getOrElseUpdate(id, StageRow(id, name.takeWhile(_ != '\n')))
     override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
-      starts(s.stageInfo.stageId) = System.nanoTime()
       row(s.stageInfo.stageId, s.stageInfo.name); ()
     }
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-      row(s.stageInfo.stageId, s.stageInfo.name).wallMs = starts
-        .get(s.stageInfo.stageId).map(t0 => (System.nanoTime() - t0) / 1000000)
-        .getOrElse(-1L)
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      val i = s.stageInfo
+      row(i.stageId, i.name).wallMs =
+        i.submissionTime.zip(i.completionTime).map { case (t0, t1) => t1 - t0 }
+          .getOrElse(-1L)
+    }
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
       val r = row(t.stageId, "?")
       r.tasks += 1
@@ -65,18 +66,6 @@ object Inspect {
         r.cpuNs += m.executorCpuTime
         r.gcMs += m.jvmGCTime
       }
-    }
-    /** Wait until the tallies stop moving (ADVICE r15: a fixed 300 ms
-      * sleep dropped late task-end events on slow queries);
-      * listenerBus.waitUntilEmpty is private[spark], so poll the
-      * observable effect instead, with a hard 5 s cap. */
-    def settle(): Unit = {
-      var last = -1L
-      val deadline = System.nanoTime() + 5000000000L
-      while (System.nanoTime() < deadline && {
-        val c = stages.values.map(r => r.tasks.toLong + r.runMs).sum
-        val moved = c != last; last = c; moved
-      }) Thread.sleep(150)
     }
   }
 
@@ -104,8 +93,10 @@ object Inspect {
       spark.sparkContext.addSparkListener(listener)
       spark.listenerManager.register(executed)
       try run() finally {
-        listener.settle(); spark.sparkContext.removeSparkListener(listener)
-        executed.settle(); spark.listenerManager.unregister(executed)
+        // every stage, task and query-end event of the run is delivered
+        GraftShims.waitForListeners(spark)
+        spark.sparkContext.removeSparkListener(listener)
+        spark.listenerManager.unregister(executed)
       }
     })
     println(f"  noop sink: cold=$cold%.2f s  warm=${warm.map(w => f"$w%.2f").mkString(" ")} s  min=${warm.min}%.2f s")
@@ -136,10 +127,5 @@ object Inspect {
     override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
       if (qe.analyzed.isInstanceOf[V2WriteCommand]) plan = Some(qe.executedPlan)
     override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    /** Query-end events arrive on the listener bus; wait up to 5 s. */
-    def settle(): Unit = {
-      val deadline = System.nanoTime() + 5000000000L
-      while (plan.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-    }
   }
 }

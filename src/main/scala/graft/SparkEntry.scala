@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{DedupSim, EvalQueries, EventQueries, GraphQueries, IoQueries, MultimodalQueries, PipelineQueries, PlanQueries, Relational, Relational2, TextQueries, TrainingQueries, TweetOps}
+import graft.queries.{DedupSim, EvalQueries, EventQueries, GraphQueries, IoQueries, MultimodalQueries, PipelineQueries, PlanQueries, QueryModule, Relational, Relational2, TextQueries, TrainingQueries, TweetOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -12,22 +12,12 @@ import graft.queries.{DedupSim, EvalQueries, EventQueries, GraphQueries, IoQueri
   */
 object SparkEntry {
 
-  private def modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
-    Seq(
-      (Relational.queries, Relational.oracles),
-      (Relational2.queries, Relational2.oracles),
-      (TweetOps.queries, TweetOps.oracles),
-      (TextQueries.queries, TextQueries.oracles),
-      (DedupSim.queries, DedupSim.oracles),
-      (EventQueries.queries, EventQueries.oracles),
-      (MultimodalQueries.queries, MultimodalQueries.oracles),
-      (IoQueries.queries, IoQueries.oracles),
-      (PipelineQueries.queries, PipelineQueries.oracles),
-      (PlanQueries.queries, PlanQueries.oracles),
-      (TrainingQueries.queries, TrainingQueries.oracles),
-      (GraphQueries.queries, GraphQueries.oracles),
-      (EvalQueries.queries, EvalQueries.oracles)
-    )
+  /** Every query module, once: [[queries]], [[oracleSql]] and
+    * [[staging]] are the unions of its parts. */
+  private[graft] def modules: Seq[QueryModule] =
+    Seq(Relational, Relational2, TweetOps, TextQueries, DedupSim,
+      EventQueries, MultimodalQueries, IoQueries, PipelineQueries,
+      PlanQueries, TrainingQueries, GraphQueries, EvalQueries)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks
     * rows>0: the full reference pipeline (cleanse → NER → weighted
@@ -37,12 +27,12 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_._1).reduce(_ ++ _)
+    modules.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    modules.map(_._2).reduce(_ ++ _)
+    modules.map(_.oracles).reduce(_ ++ _)
 
   /** One-time fixture staging per query (layout writes, stream
     * drains), memoized per JVM by graft.io.Staging. QueryLoop runs
@@ -50,6 +40,5 @@ object SparkEntry {
     * `staging`); queries remain self-contained for every other caller
     * (first call stages inline). */
   def staging: Map[String, (SparkSession, String) => Unit] =
-    IoQueries.staging ++ EventQueries.staging ++ DedupSim.staging ++
-      GraphQueries.staging
+    modules.map(_.staging).reduce(_ ++ _)
 }

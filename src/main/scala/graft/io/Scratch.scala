@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Scratch-space selection and the one session factory for the
   * single-JVM harness entrypoints (Bench / Verify / PlanAudit /
-  * Inspect / OpBench / AnnEval / AnnMarginEval / Datagen) and the
-  * specs.
+  * Inspect / OpBench / Datagen) and the specs.
   *
   * Spark treats `spark.local.dir` as the fast-ephemeral tier — on a
   * real cluster the cluster manager points it at executor-local NVMe.

@@ -19,7 +19,7 @@ import graft.text.TextStats
   * hash families are md5-derived integer arithmetic expressible in
   * both engines, and all float folds are explicit left-to-right.
   */
-object DedupSim {
+object DedupSim extends QueryModule {
 
   private val P = Dedup.P
 
@@ -171,7 +171,7 @@ object DedupSim {
   /** Bench pre-pass entries: materialize the shared pair build before
     * the per-query timer (same contract as IoQueries/EventQueries
     * staging). */
-  def staging: Map[String, (SparkSession, String) => Unit] = Map(
+  override def staging: Map[String, (SparkSession, String) => Unit] = Map(
     "q74_dedup_clusters" -> lshPairs.stage,
     "qA1_canonical_docs" -> clusterLabels.stage,
     "qF3_split_leakage" -> clusterLabels.stage,
@@ -632,8 +632,8 @@ object DedupSim {
     }),
 
     // Int8 scalar quantization + integer-dot re-rank (the 4× memory
-    // compression path; see Similarity.int8TopK). Global symmetric
-    // scale, floor codes, exact integer dots — the oracle re-derives
+    // compression path; see Similarity.int8TopK). Per-vector symmetric
+    // scale, round-to-nearest codes, exact integer dots — the oracle re-derives
     // every code and the full per-query top-5, so a scale drift, a
     // rounding difference, or a ranking tie-break bug breaks the hash.
     "qCA_int8_ann" -> ((s, dir) =>

@@ -22,7 +22,7 @@ import graft.io.Sources.table
   * (correctly-rounded, matches DuckDB's libm `ln` — q11B precedent)
   * and are floor-quantized to integer nanos BEFORE any sum.
   */
-object EvalQueries {
+object EvalQueries extends QueryModule {
 
   /** q130/q12E's probe-set cap (round 12): the %25 probe rule makes the
     * probe COUNT grow with the corpus, so probes×corpus pair volume

@@ -22,7 +22,7 @@ import graft.streaming.EventWindows
   * reads the drained sink. Correctness is unchanged: the first call
   * in any process performs the identical copy + drain inline.
   */
-object EventQueries {
+object EventQueries extends QueryModule {
 
   /** q7D's click-probe cap — see the q7D comment. 24576 exceeds the
     * sf0.1 click population (19,863), binds at sf1+. */
@@ -161,7 +161,7 @@ object EventQueries {
     }
 
   /** Staging hooks Bench runs ahead of the per-query timer. */
-  def staging: Map[String, (SparkSession, String) => Unit] = Map(
+  override def staging: Map[String, (SparkSession, String) => Unit] = Map(
     "q56_stream_tumbling" -> ((s, dir) => { stageQ56(s, dir); () }),
     "q79_stream_enrich" -> ((s, dir) => { stageQ79(s, dir); () }),
     "q7A_stream_stream_join" -> ((s, dir) => { stageQ7A(s, dir); () }),

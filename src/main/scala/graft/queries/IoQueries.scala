@@ -24,7 +24,7 @@ import graft.io.Sources.table
   *    re-runnable, and expressible in any engine (which is what makes
   *    it oracle-checkable at all).
   */
-object IoQueries {
+object IoQueries extends QueryModule {
 
   /** SNK1 under test: the distributed CSV write, staged once per JVM
     * (Bench reports it as stage_s; the timed query is the glob
@@ -182,7 +182,7 @@ object IoQueries {
     }
 
   /** Staging hooks Bench runs ahead of the per-query timer. */
-  def staging: Map[String, (SparkSession, String) => Unit] = Map(
+  override def staging: Map[String, (SparkSession, String) => Unit] = Map(
     "qE9_binary_files" -> ((s, dir) => { stageBinary(s, dir); () }),
     "qD5_dsv2_sink" -> sinkOrders.stage,
     "q57_csv_roundtrip" -> ((s, dir) => { stageCsv(s, dir); () }),

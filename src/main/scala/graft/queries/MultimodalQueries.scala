@@ -15,7 +15,7 @@ import graft.multimodal.Multimodal
   * derivable from the text in SQL (the corpus is ASCII: ord == byte).
   * q61 keeps the documented frame-count stub (still images have no
   * frames) for the video fan-out shape. */
-object MultimodalQueries {
+object MultimodalQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Magic-byte format sniffing — the FIRST pass any multimodal

@@ -30,7 +30,7 @@ import graft.pipeline.TweetPipeline
   *    ≤ 28 mantissa bits over a ≤ 13-bit exponent spread, so every
   *    double partial sum is EXACT (order-independent) — verified
   *    hash-green, not just assumed. */
-object PipelineQueries {
+object PipelineQueries extends QueryModule {
 
   /** documents → (Timestamp, Text, Page_URL, Comments, Likes,
     * Retweets) with derived dates/keywords/engagement counts. */

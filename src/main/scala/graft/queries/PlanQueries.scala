@@ -13,7 +13,7 @@ import graft.plans.{GroupedTopK, WindowTopKRewrite}
   * window-idiom SQL the operator replaces. Orderings carry a unique
   * key suffix so top-k is total (the operator's documented contract).
   */
-object PlanQueries {
+object PlanQueries extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Direct API: top-2 lineitems per supplier by price. The plan is

@@ -28,7 +28,7 @@ import graft.io.Sources.table
   *  - Top-k (sort+limit) plans as TakeOrderedAndProject: per-partition
   *    heap + driver merge of k rows, never a global sort.
   */
-object Relational {
+object Relational extends QueryModule {
 
   /** Per-row doubles are rounded before output on BOTH engines so
     * that last-ulp differences can't flip the driver's hash compare.

@@ -14,7 +14,7 @@ import graft.io.Sources.table
   * ladder; no custom SparkPlan needed for these semantics. DuckDB's
   * native ASOF JOIN serves as the oracle.
   */
-object Relational2 {
+object Relational2 extends QueryModule {
 
   /** (return flag, integer cents) per lineitem row, for qCD and qCC.
     * A one-row-group lineitem scans in a single task; the spread runs

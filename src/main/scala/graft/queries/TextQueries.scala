@@ -21,7 +21,7 @@ import graft.text.{EntityRuler, Sentiment, TextStats}
   * scales to the production dictionary. Where the dictionary is not
   * mounted, q38 is q30 and is checked against q30's oracle.
   */
-object TextQueries extends org.apache.spark.internal.Logging {
+object TextQueries extends QueryModule with org.apache.spark.internal.Logging {
 
   /** Committed demo pattern set over the documents vocabulary:
     * exercises multi-token LOWER patterns, longest-match priority,

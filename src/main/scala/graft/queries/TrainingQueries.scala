@@ -16,7 +16,7 @@ import graft.text.TextStats
   * it hash-checks), and shard-local sequence packing. All three are
   * narrow or partition-local — no all-pairs, no global sort.
   */
-object TrainingQueries {
+object TrainingQueries extends QueryModule {
 
   /** Chunk size / stride in tokens (overlap = Chunk - Stride). */
   private val Chunk = 32

@@ -18,7 +18,7 @@ import graft.ops.{Aggregates, Cleanse, Pairs}
   * whole chain stays in whole-stage codegen and Catalyst pushes
   * projections into the parquet scans.
   */
-object TweetOps {
+object TweetOps extends QueryModule {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // U2 transformNumber: K/M-suffixed social-count strings → int.

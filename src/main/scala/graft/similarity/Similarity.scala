@@ -32,11 +32,6 @@ object Similarity {
 
   def norm2(a: Column): Column = sqrt(dot(a, a))
 
-  /** cosine similarity; expression shape dot/(sqrt·sqrt) is mirrored
-    * verbatim by the oracle for bit parity. */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm2(a) * norm2(b))
-
   /** Brute-force top-k by cosine against the corpus vector with
     * `queryId` (ties broken by id for determinism): one broadcast
     * query row, a narrow map over the corpus, TakeOrderedAndProject.
@@ -46,7 +41,7 @@ object Similarity {
     val e = corpus.select(col(idCol), asDouble(col(vecCol)).as("v"))
       .withColumn("nrm", norm2(col("v")))
       // zero-norm vectors make cos NaN (Spark sorts NaN ABOVE all
-      // numbers, so they'd fill the top-k) — same guard as ivfNNAll
+      // numbers, so they'd fill the top-k) — same guard as `indexed`
       .filter(col("nrm") > 0)
     val q = e.filter(col(idCol) === queryId)
       .select(col("v").as("qv"), col("nrm").as("qn"))
@@ -57,6 +52,34 @@ object Similarity {
       .limit(k)
       .select(col(idCol), col("cos"))
   }
+
+  /** The corpus the IVF paths index: (id, v, nrm), `v` the embedding
+    * as doubles and `nrm` its L2 norm. Zero-norm vectors are dropped
+    * before training or assignment: their cosine is NaN, which Spark
+    * sorts ABOVE all numbers, so they can be neither query nor
+    * neighbor. */
+  private def indexed(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+      .withColumn("nrm", norm2(col("v")))
+      .filter(col("nrm") > 0)
+
+  /** Every row of `e` (id, v, …) against every centroid (cid, cv, cc):
+    * a broadcast of k rows + a narrow map computing
+    * d2 = |c|² − 2·v·c, the squared L2 distance less |v|², which is
+    * constant per row. */
+  private def centroidD2(e: DataFrame, cents: DataFrame): DataFrame =
+    e.crossJoin(broadcast(cents))
+      .withColumn("d2", col("cc") - lit(2.0) * dot(col("v"), col("cv")))
+
+  /** Argmin-L2 cell of every row of [[centroidD2]]'s output over an
+    * [[indexed]] corpus, as (id, v, nrm, cell): a min_by partial
+    * aggregation keyed by id (map-side combine, no window sort); ties
+    * break to the lower centroid id through the struct ordering. */
+  private def assignCells(withD2: DataFrame): DataFrame =
+    withD2.groupBy("id")
+      .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cell"),
+        first(col("v")).as("v"), first(col("nrm")).as("nrm"))
+      .select(col("id"), col("v"), col("nrm"), col("cell"))
 
   /** Seeded Lloyd k-means coarse quantizer for the IVF paths: init =
     * the first k vectors by id (the same deterministic seed the
@@ -73,22 +96,25 @@ object Similarity {
     * iteration count, fixed init, no RNG — which is why the ORACLE
     * paths (q48/q55) stay on the untrained first-k quantizer: their
     * results must be bit-stable across engines. Trained centroids are
-    * a RECALL upgrade at the same probe budget (SimilaritySpec pins
-    * trained ≥ first-k on a clustered corpus), not a semantics
-    * change: the search path is identical either way.
+    * a RECALL upgrade at the same probe budget on clustered data
+    * (SimilaritySpec pins trained ≥ first-k on a clustered corpus),
+    * not a semantics change: the search path is identical either way.
+    * On the noise-like sf0.01 embeddings they read lower (recall@10
+    * 0.8375 against first-k's 0.9000, 16 cells, 4 probes).
     *
     * Returns (cid, cv, cc) ready for the assignment/probe joins. */
   def kmeansCentroids(vecs: DataFrame, k: Int, iters: Int): DataFrame = {
     val spark = vecs.sparkSession
     val e = vecs.select(col("id"), col("v"))
+    def frame(cents: Array[(Long, Seq[Double])]) =
+      spark.createDataFrame(cents.toSeq).toDF("cid", "cv")
+        .withColumn("cc", dot(col("cv"), col("cv")))
     var cents: Array[(Long, Seq[Double])] = e.orderBy(col("id").asc).limit(k)
       .collect().zipWithIndex
       .map { case (r, i) => (i.toLong, r.getSeq[Double](1)) }
     for (_ <- 0 until iters) {
-      val cdf = broadcast(spark.createDataFrame(cents.toSeq).toDF("cid", "cv")
-        .withColumn("cc", dot(col("cv"), col("cv"))))
-      val means = e.crossJoin(cdf)
-        .withColumn("d2", col("cc") - lit(2.0) * dot(col("v"), col("cv")))
+      // the assignment carries no norm, so it stays out of assignCells
+      val means = centroidD2(e, frame(cents))
         .groupBy("id")
         .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cell"),
           first(col("v")).as("v"))
@@ -101,8 +127,7 @@ object Similarity {
         .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
       cents = cents.map { case (cid, cv) => (cid, means.getOrElse(cid, cv)) }
     }
-    spark.createDataFrame(cents.toSeq).toDF("cid", "cv")
-      .withColumn("cc", dot(col("cv"), col("cv")))
+    frame(cents)
   }
 
   /** First-k-by-id coarse quantizer — fully deterministic ⇒ the
@@ -116,105 +141,25 @@ object Similarity {
         .select(col("id").as("cid"), col("v").as("cv"))
         .withColumn("cc", dot(col("cv"), col("cv")))
 
-  /** IVF index build — the amortizable half of the IVF path: coarse
-    * quantizer (first-k default, Lloyd-trained with `trainIters` > 0)
-    * plus the argmin-L2 cell assignment of every corpus vector.
-    * Returns (centroids, assigned) where assigned = (id, v, nrm,
-    * cell); callers persist `assigned` (parquet / localCheckpoint)
-    * and reuse it across query batches — that amortization is the
-    * ONLY way IVF beats brute force: assignment costs kCentroids
-    * dots per corpus row, brute force costs one dot per row per
-    * query, so an un-amortized index loses whenever
-    * kCentroids > nQueries (the round-11 ANN_EVAL_SF1 finding:
-    * per-query ivfTopK re-assigned the corpus 8 times and lost to
-    * brute force at recall 1.0). AnnEval prices the build and the
-    * break-even batch count per SF. */
-  def ivfAssign(corpus: DataFrame, idCol: String, vecCol: String,
-                kCentroids: Int = 16, trainIters: Int = 0)
-      : (DataFrame, DataFrame) = {
-    val e = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      .filter(col("nrm") > 0)
-    val cents = quantizer(e, kCentroids, trainIters)
-    val assigned = e.crossJoin(broadcast(cents))
-      .withColumn("d2", col("cc") - lit(2.0) * dot(col("v"), col("cv")))
-      .groupBy("id")
-      .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cell"),
-        first(col("v")).as("v"), first(col("nrm")).as("nrm"))
-      .select(col("id"), col("v"), col("nrm"), col("cell"))
-    (cents, assigned)
-  }
-
-  /** Query-batch search over a PRE-BUILT IVF index (from
-    * [[ivfAssign]]): queries are the dense corpus ids 0..nQueries−1
-    * (the embeddings table's contract, like int8TopK); each probes
-    * its nProbe nearest cells and takes cosine top-k over their
-    * members, all in ONE job. Semantics per query are identical to
-    * [[ivfTopK]] at the same (kCentroids, nProbe): same quantizer,
-    * same probe order, same tie-breaks — and with
-    * nProbe = kCentroids it equals brute force exactly
-    * (SimilaritySpec pins both).
-    *
-    * Scale: the query side is nQueries rows (broadcast with their
-    * probe cells); the corpus side is scanned once, each row scored
-    * only against queries probing its cell — |corpus|·nProbe/k dots
-    * in expectation, i.e. a kCentroids/nProbe-fold per-query dot cut
-    * vs brute force, with no shuffle of the corpus (top-k is the
-    * WindowTopKRewrite per-qid heap). */
-  def ivfBatchTopK(cents: DataFrame, assigned: DataFrame,
-                   nQueries: Int, nProbe: Int = 4, topK: Int = 10)
-      : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = assigned.filter(col("id") < nQueries)
-      .select(col("id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    // nProbe nearest cells per query: queries × centroids is
-    // nQueries·kCentroids rows — tiny, one hash agg, broadcast out
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("d2", col("cc") - lit(2.0) * dot(col("qv"), col("cv")))
-      .groupBy("qid")
-      .agg(slice(array_sort(collect_list(struct(col("d2"), col("cid")))),
-          1, nProbe).as("pc"),
-        first(col("qv")).as("qv"), first(col("qn")).as("qn"))
-      .select(col("qid"), col("qv"), col("qn"),
-        explode(col("pc.cid")).as("cell"))
-    assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("id") =!= col("qid"))
-      .withColumn("cos", dot(col("v"), col("qv")) / (col("nrm") * col("qn")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("id").asc)))
-      .filter(col("rn") <= topK)
-      .select(col("qid"), col("id").as("nn_id"), col("cell"), col("cos"))
-  }
-
   /** IVF-style ANN: coarse quantizer (first-k default, Lloyd-trained
     * with `trainIters` > 0), cell assignment by argmin squared-L2,
     * query probes the nProbe nearest cells and searches only their
-    * members.
+    * members. With nProbe = kCentroids every cell is probed and the
+    * answer is [[bruteForceTopKById]]'s (SimilaritySpec pins both
+    * that and recall@10 floors at nProbe < kCentroids).
     *
     * Scale: assignment is a broadcast of k centroid rows + a narrow
     * map (k dots/row); search touches |corpus|·nProbe/k vectors in
-    * expectation instead of all of them — but NOTE the assignment is
-    * rebuilt per call: for query batches use [[ivfAssign]] +
-    * [[ivfBatchTopK]], which amortize it. */
+    * expectation instead of all of them — but the assignment is
+    * rebuilt per call, kCentroids dots per corpus row against brute
+    * force's one (at sf1, 8 per-query calls took 10.1 s against brute
+    * force's 9.0 s, both at recall 1.0). */
   def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
               queryId: Long, kCentroids: Int = 16, nProbe: Int = 4,
               topK: Int = 10, trainIters: Int = 0): DataFrame = {
-    val e = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      // zero-norm guard BEFORE training/assignment (same as ivfNNAll):
-      // a zero vector in a probed cell would rank NaN-first in top-k
-      .filter(col("nrm") > 0)
+    val e = indexed(corpus, idCol, vecCol)
     val cents = quantizer(e, kCentroids, trainIters)
-    // cell assignment: argmin_c (|c|² − 2·v·c)  (|v|² constant per v)
-    // via min_by partial aggregation — map-side combine, no window
-    // sort; ties break to the lower centroid id through the struct
-    // ordering
-    val assigned = e.crossJoin(broadcast(cents))
-      .withColumn("d2", col("cc") - lit(2.0) * dot(col("v"), col("cv")))
-      .groupBy("id")
-      .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cell"),
-        first(col("v")).as("v"), first(col("nrm")).as("nrm"))
-      .select(col("id"), col("v"), col("nrm"), col("cell"))
+    val assigned = assignCells(centroidD2(e, cents))
     // probe cells: the nProbe centroids nearest to the query vector
     val q = e.filter(col("id") === queryId)
       .select(col("v").as("qv"), col("nrm").as("qn"))
@@ -250,18 +195,10 @@ object Similarity {
                kCentroids: Int = 16, nProbe: Int = 4,
                trainIters: Int = 0,
                queryIds: Option[DataFrame] = None): DataFrame = {
-    val e = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      // zero-norm vectors make cos NaN (which Spark sorts ABOVE all
-      // numbers) — they can be neither query nor neighbor
-      .filter(col("nrm") > 0)
-    val cents = quantizer(e, kCentroids, trainIters)
-    val withD2 = e.crossJoin(broadcast(cents))
-      .withColumn("d2", col("cc") - lit(2.0) * dot(col("v"), col("cv")))
-    val assigned = withD2.groupBy("id")
-      .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cell"),
-        first(col("v")).as("nv"), first(col("nrm")).as("nn"))
-      .select(col("id").as("nn_id"), col("cell"), col("nv"), col("nn"))
+    val e = indexed(corpus, idCol, vecCol)
+    val withD2 = centroidD2(e, quantizer(e, kCentroids, trainIters))
+    val assigned = assignCells(withD2)
+      .select(col("id").as("nn_id"), col("cell"), col("v").as("nv"), col("nrm").as("nn"))
     // queryIds: optional bounded query side (a one-column "id"
     // frame) — the INDEX side above always covers the full corpus;
     // with a fixed kCentroids, an all-vectors query side makes the
@@ -296,9 +233,10 @@ object Similarity {
     * per-vector, not corpus-global, for a measured reason: with one
     * global M = max |x| over the corpus, a single stretched outlier
     * vector quantizes everyone else into a handful of levels —
-    * AnnEval measured recall@10 collapsing 0.975 (sf1) → 0.113 (sf10)
-    * on the replica fixture's wider value range; per-vector scaling
-    * confines an outlier's damage to its own vector. Every arithmetic
+    * recall@10 measured 0.975 at sf1 collapsed to 0.113 at sf10 on
+    * the replica fixture's wider value range; per-vector scaling
+    * confines an outlier's damage to its own vector (SimilaritySpec
+    * pins its recall@10 floor and the margin property). Every arithmetic
     * step is exact (max comparison, integer dot in double range,
     * one fixed-order float product), so a DuckDB oracle reproduces
     * the ranking bit-for-bit.

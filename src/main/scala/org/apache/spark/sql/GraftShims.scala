@@ -88,9 +88,10 @@ object GraftShims {
     }
   }
 
-  /** Test seam: block until every listener has been handed every event
-    * posted so far (the listener bus is private[spark]), so a spec can
-    * count jobs and executions without sleeping. */
+  /** Block until every listener has been handed every event posted so
+    * far (the listener bus is private[spark]): the one barrier for
+    * code that reads a listener's tallies of jobs, stages and
+    * executions that have already run, without sleeping. */
   def waitForListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 

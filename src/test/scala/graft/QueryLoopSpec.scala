@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShims}
 
 import scala.collection.mutable
 
@@ -28,7 +28,7 @@ class QueryLoopSpec extends SparkSpec {
     try {
       val sel = QueryLoop.select(Seq("q01_agg_pricing", "q99_typo", "nope"))
       assert(sel == Left(Seq("q99_typo", "nope")))
-      Thread.sleep(200)
+      GraftShims.waitForListeners(spark)
       assert(jobs == 0)
     } finally spark.sparkContext.removeSparkListener(listener)
   }

@@ -3,27 +3,34 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract invariants for the query registry. The registry
-  * is assembled by `Map ++ Map` over twelve modules — a duplicated
-  * query name would SILENTLY drop the earlier module's query (and
-  * its oracle would then check the wrong plan), so uniqueness is
-  * load-bearing, not stylistic. No SparkSession needed: these are
-  * pure map properties.
+  * is assembled by `Map ++ Map` over [[SparkEntry.modules]] — a
+  * duplicated query name would SILENTLY drop the earlier module's
+  * query (and its oracle would then check the wrong plan), so
+  * uniqueness is load-bearing, not stylistic. No SparkSession needed:
+  * these are pure map properties.
   */
 class SparkEntryContractSpec extends AnyFunSuite {
 
   test("query names are globally unique across modules") {
-    val perModule = Seq(
-      graft.queries.Relational.queries, graft.queries.Relational2.queries,
-      graft.queries.TweetOps.queries, graft.queries.TextQueries.queries,
-      graft.queries.DedupSim.queries, graft.queries.EventQueries.queries,
-      graft.queries.MultimodalQueries.queries, graft.queries.IoQueries.queries,
-      graft.queries.PipelineQueries.queries, graft.queries.PlanQueries.queries,
-      graft.queries.TrainingQueries.queries, graft.queries.GraphQueries.queries,
-      graft.queries.EvalQueries.queries)
-    val all = perModule.flatMap(_.keys)
+    val all = SparkEntry.modules.flatMap(_.queries.keys)
     val dups = all.groupBy(identity).filter(_._2.size > 1).keys.toSeq.sorted
     assert(dups.isEmpty, s"duplicate query names across modules: $dups")
     assert(SparkEntry.queries.size === all.size)
+  }
+
+  test("the registry's key sets: 274 queries, each with an oracle, 25 staged") {
+    assert(SparkEntry.modules.size === 13)
+    assert(SparkEntry.queries.size === 274)
+    assert(SparkEntry.oracleSql.size === 274)
+    assert(SparkEntry.staging.keySet === Set(
+      "q11B_adamic_adar", "q56_stream_tumbling", "q57_csv_roundtrip",
+      "q5A_stream_stateful", "q5B_bucketed_join", "q5C_partition_prune",
+      "q5D_stream_dedup", "q74_dedup_clusters", "q79_stream_enrich",
+      "q7A_stream_stream_join", "q81_jsonl_roundtrip", "q82_stream_dedup_watermark",
+      "q83_orc_roundtrip", "qA1_canonical_docs", "qA5_dynamic_prune",
+      "qB2_triangle_count", "qB9_xml_roundtrip", "qBE_stream_session",
+      "qC1_curation_pipeline", "qC3_schema_evolution", "qD5_dsv2_sink",
+      "qD7_stream_v2_sink", "qE8_kcore", "qE9_binary_files", "qF3_split_leakage"))
   }
 
   test("every oracle key has a query; every staging key has a query") {

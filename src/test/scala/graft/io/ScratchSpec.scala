@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * tier without each call site knowing the policy. Also pins the one
   * session factory, [[Scratch.builder]], that no other main source
   * builds a session, that only graft.QueryLoop walks the query
-  * registry, and that no main source outside [[CheckpointStrategy]]
-  * (and OpBench) checkpoints directly. */
+  * registry, that no main source outside [[CheckpointStrategy]]
+  * (and OpBench) checkpoints directly, and that none sleeps. */
 class ScratchSpec extends AnyFunSuite {
 
   test("root is a writable directory and prefers the RAM tier when present") {
@@ -97,5 +97,13 @@ class ScratchSpec extends AnyFunSuite {
     val sites = mainSourcesContaining("localCheckpoint(", ".checkpoint(")
     assert(sites == Seq("graft/OpBench.scala", "graft/io/Checkpoint.scala"),
       s"engine code materializes through io.CheckpointStrategy; found $sites")
+  }
+
+  test("no main source calls Thread.sleep") {
+    // waiting on Spark's listeners goes through
+    // GraftShims.waitForListeners, which returns once every event
+    // posted so far is delivered; a sleep is both slower and racy
+    val sites = mainSourcesContaining("Thread.sleep")
+    assert(sites.isEmpty, s"main sources that sleep: $sites")
   }
 }

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -90,19 +90,13 @@ class StagingSpec extends SparkSpec {
   }
 
   /** Spark jobs submitted by `body`, counted once the listener bus has
-    * delivered a marker job that ran after it. */
+    * delivered every event posted while it ran. */
   private def jobsDuring(body: => Unit): Int = {
     val sc = spark.sparkContext
     val g = s"stagingspec-${System.nanoTime()}"
     sc.setJobGroup(g, "build")
     try body finally sc.clearJobGroup()
-    sc.setJobGroup(s"$g-marker", "drain")
-    try spark.range(1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30000000000L
-    while (sc.statusTracker.getJobIdsForGroup(s"$g-marker").isEmpty &&
-      System.nanoTime() < deadline) Thread.sleep(20)
-    assert(sc.statusTracker.getJobIdsForGroup(s"$g-marker").nonEmpty,
-      "listener bus did not drain")
+    GraftShims.waitForListeners(spark)
     sc.statusTracker.getJobIdsForGroup(g).length
   }
 

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.functions.col
 
 import graft.ops.Cleanse
@@ -120,7 +121,7 @@ class TweetPipelineSpec extends SparkSpec {
       // force full analysis (not execution) of every output
       assert(Seq(o.freq1d, o.sent1d, o.sent2d, o.freq2d)
         .forall(_.schema.fieldNames.nonEmpty))
-      Thread.sleep(1000) // listener bus is async; let events drain
+      GraftShims.waitForListeners(spark) // every job event is delivered
       assert(jobs.get() === 0,
         s"pinned-months construction submitted ${jobs.get()} job(s)")
     } finally spark.sparkContext.removeSparkListener(listener)

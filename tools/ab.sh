@@ -70,7 +70,9 @@ echo "[ab] work: the working tree (HEAD $head and its changes) in $ab/work" >&2
 checkout "$ab/work" "$head"
 (cd "$repo" && git ls-files -z --cached --others --exclude-standard |
   tar --null --ignore-failed-read -T - -cf - 2>/dev/null) | tar -xf - -C "$ab/work"
-(cd "$repo" && git ls-files -z --deleted) | (cd "$ab/work" && xargs -0 -r rm -f --)
+# staged or not, every file deleted since HEAD
+(cd "$repo" && git diff -z --name-only --diff-filter=D HEAD) |
+  (cd "$ab/work" && xargs -0 -r rm -f --)
 
 python3 -B - "$ab" "$workload" "$pairs" "$rev" "$sha" <<'PY'
 import json, os, statistics, subprocess, sys
